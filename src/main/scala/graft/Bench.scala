@@ -201,6 +201,14 @@ object Bench {
     committedRecordAt(sys.env.getOrElse("SPARK_GRAFT_BENCH_RECORD",
       "/root/repo/BENCH_RECORD.json"))
 
+  /** Median of a non-empty sample: the middle value, or the mean of the
+    * two middle values when the size is even. */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val m = s.size / 2
+    if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
   private[graft] def committedRecordAt(p: String): Map[String, Double] = {
     val path = java.nio.file.Paths.get(p)
     try {
@@ -282,8 +290,7 @@ object Bench {
             // three ratios discards a single biased (or noisy) probe in
             // either direction; with the other two probes' record rows
             // calibration-vintage, it reads ~1.0 on a quiet host.
-            val ratios = pairs.map(p => p._1 / p._2).sorted
-            val idx = ratios(ratios.size / 2)
+            val idx = median(pairs.map(p => p._1 / p._2))
             System.err.println(
               f"INFO bench ambient_index=$idx%.3f (median of ratios " +
                 pairs.map(p => f"${p._1}%.3f/${p._2}%.3f").mkString(", ") +

@@ -47,6 +47,15 @@ import graft.tables.Tables
  * Concurrency: requests run on a fixed pool; the engine layers are
  * thread-safe (SURVEY §7.5(6) — Spark inverts the reference's serialized
  * single-connection model).
+ *
+ * Sockets: accepted connections set TCP_NODELAY. The JDK server writes a
+ * response as two segments (`sendResponseHeaders`, then the body), so with
+ * Nagle's algorithm on, the body waits for the client's delayed ACK of the
+ * headers — about 40 ms on every keep-alive response, whatever the route's
+ * own cost. The JDK reads the switch (`sun.net.httpserver.nodelay`) once,
+ * when its server configuration class loads, so [[start]] sets it in code
+ * before the first `HttpServer.create` in the JVM rather than leaving it
+ * to a launcher flag.
  */
 final class HttpFacade(
     spark: org.apache.spark.sql.SparkSession,
@@ -57,6 +66,7 @@ final class HttpFacade(
 
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0, threads: Int = 8): Int = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.setExecutor(Executors.newFixedThreadPool(threads))
     server.createContext("/", (ex: HttpExchange) => route(ex))
@@ -241,20 +251,28 @@ final class HttpFacade(
 
   private def results(ex: HttpExchange, id: String): Unit = {
     val q = queryParams(ex)
-    val pageSize = q.get("page_size").map(_.toInt).getOrElse(100)
-    val offset = q.get("offset").map(_.toInt).getOrElse(0)
-    if (!ResultStream.ValidPageSizes.contains(pageSize)) {
-      sendJson(ex, 400, detail("Invalid page_size. Must be one of: " +
-        ResultStream.ValidPageSizes.toSeq.sorted.mkString("[", ", ", "]")))
-      return
+    def int(name: String, dflt: Int): Either[String, Int] =
+      q.get(name).fold(Option(dflt))(_.toIntOption)
+        .toRight(s"$name must be an integer")
+    val parsed = for {
+      pageSize <- int("page_size", 100)
+      offset <- int("offset", 0)
+      _ <- Either.cond(offset >= 0, (), "offset must be non-negative")
+      _ <- Either.cond(ResultStream.ValidPageSizes.contains(pageSize), (),
+        "Invalid page_size. Must be one of: " +
+          ResultStream.ValidPageSizes.toSeq.sorted.mkString("[", ", ", "]"))
+    } yield (pageSize, offset)
+    parsed match {
+      case Left(msg) => sendJson(ex, 400, detail(msg))
+      case Right((pageSize, offset)) =>
+        val lines = ResultStream.ndjsonAwait(
+          () => parseUuid(id).flatMap(executor.getStatus), id, pageSize, offset)
+        ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
+        ex.sendResponseHeaders(200, 0)
+        val out = ex.getResponseBody
+        lines.foreach { l => out.write(l.getBytes(UTF_8)); out.write('\n') }
+        out.close()
     }
-    val lines = ResultStream.ndjsonAwait(
-      () => parseUuid(id).flatMap(executor.getStatus), id, pageSize, offset)
-    ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-    ex.sendResponseHeaders(200, 0)
-    val out = ex.getResponseBody
-    lines.foreach { l => out.write(l.getBytes(UTF_8)); out.write('\n') }
-    out.close()
   }
 
   private def cancel(ex: HttpExchange, id: String): Unit =

@@ -36,20 +36,42 @@ object GraftEngine {
       // once the workload exceeds ~30 distinct queries and each re-arrival
       // pays a full Janino recompile (seconds for wide projections).
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // Spark's live status store keeps up to 1000 jobs, stages and SQL
+      // executions (with their task and plan-metric wrappers) even with the
+      // UI off. Nothing in the engine reads the store, so at the default a
+      // long-running server's heap grows with every request it completes.
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.sql.ui.retainedExecutions", "100")
       .getOrCreate()
   }
 
   /**
-   * Health check — engine liveness (`SELECT 1`) then catalog reachability,
-   * rolled up to healthy/degraded like the reference
+   * Health check — engine liveness then catalog reachability, rolled up to
+   * healthy/degraded/unhealthy like the reference
    * (reference: engine.py:166-211, api/routes/health.py:44-93).
+   *
+   *  - engine: the SparkContext is not stopped, and a `SELECT 1` over a
+   *    local relation goes through parsing, analysis, optimization and
+   *    planning and returns its row;
+   *  - catalog: the current catalog answers a namespace-existence lookup
+   *    for the current namespace.
+   *
+   * Neither probe launches a Spark job. `/health` and `/ready` must answer
+   * while the workload holds every core, so a probe that queued a task
+   * behind the workload's tasks would report the load, not the engine.
+   * `SELECT 1` without a FROM plans to an RDD scan of `OneRowRelation`,
+   * which is a job; a local relation is collected on the driver.
+   * `listDatabases` runs `SHOW NAMESPACES` through a collect, another job.
    */
   def healthCheck(spark: SparkSession): Map[String, String] = {
     val engineOk =
-      try { spark.sql("SELECT 1").collect().length == 1 }
-      catch { case NonFatal(_) => false }
+      try {
+        !spark.sparkContext.isStopped &&
+          spark.sql("SELECT * FROM VALUES (1)").collect().length == 1
+      } catch { case NonFatal(_) => false }
     val catalogOk =
-      try { spark.catalog.listDatabases().take(1); true }
+      try spark.catalog.databaseExists(spark.catalog.currentDatabase)
       catch { case NonFatal(_) => false }
     Map(
       "engine" -> (if (engineOk) "healthy" else "unhealthy"),

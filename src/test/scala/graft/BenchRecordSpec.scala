@@ -49,4 +49,13 @@ class BenchRecordSpec extends AnyFunSuite {
     // a missing file degrades to no-self-check, never to a failure
     assert(Bench.committedRecordAt("/nonexistent/graft.json").isEmpty)
   }
+
+  test("the ambient index median averages the two middle ratios of an " +
+    "even sample") {
+    assert(Bench.median(Seq(1.75, 1.0, 1.25)) === 1.25)
+    // the upper-middle element alone would read 1.5
+    assert(Bench.median(Seq(2.0, 1.0, 1.25, 1.5)) === 1.375)
+    assert(Bench.median(Seq(0.75, 1.25)) === 1.0)
+    assert(Bench.median(Seq(1.5)) === 1.5)
+  }
 }

@@ -88,6 +88,39 @@ class HttpFacadeSpec extends SparkSuite {
     val exec = post("/api/v1/query/execute", """{"sql": "SELECT 1 AS x"}""")
     val qid = fieldOf(exec.body, "query_id")
     assert(get(s"/api/v1/query/$qid/results?page_size=7").statusCode === 400)
+    Seq("page_size=abc" -> "page_size must be an integer",
+        "offset=x" -> "offset must be an integer",
+        "page_size=100&offset=1.5" -> "offset must be an integer",
+        "offset=-1" -> "offset must be non-negative").foreach {
+      case (q, msg) =>
+        val r = get(s"/api/v1/query/$qid/results?$q")
+        assert(r.statusCode === 400, s"$q: ${r.body}")
+        assert(fieldOf(r.body, "detail") === msg)
+    }
+    assert(get(s"/api/v1/query/$qid/results?page_size=100&offset=0")
+      .statusCode === 200)
+  }
+
+  test("keep-alive responses are not held back by Nagle's algorithm") {
+    // Without TCP_NODELAY the body segment waits for the client's delayed
+    // ACK of the header segment: a >= 40 ms floor on every response. The
+    // JDK reads the switch once per JVM, when its server configuration
+    // loads, so this also fails if a JDK HttpServer was created anywhere
+    // in the JVM before HttpFacade.start set it.
+    val one = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(url("/api/v1/catalog/namespaces"))
+      .GET.build()
+    def timed(): Double = {
+      val t0 = System.nanoTime()
+      val r = one.send(req, BodyHandlers.ofString())
+      assert(r.statusCode === 200, r.body)
+      (System.nanoTime() - t0) / 1e6
+    }
+    (1 to 3).foreach(_ => timed()) // open and warm the connection
+    val ms = Seq.fill(21)(timed()).sorted
+    assert(ms(ms.size / 2) < 20.0,
+      s"sorted latencies (ms): ${ms.map(m => f"$m%.1f").mkString(", ")}")
   }
 
   test("cancel on a finished query reports current state") {
@@ -2214,6 +2247,25 @@ class HttpFacadeSpec extends SparkSuite {
     val r = get("/ready")
     assert(r.statusCode === 200, r.body)
     assert(r.body.contains("\"ready\":true"))
+  }
+
+  test("health and ready answer 503 when the catalog is unreachable") {
+    val s2 = graft.engine.UnreachableCatalog.session(spark)
+    val down = new HttpFacade(s2, new QueryExecutor(s2),
+      new SparkCatalogProvider(s2))
+    val p = down.start(0)
+    try {
+      def at(path: String) = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$p$path")).GET.build(),
+        BodyHandlers.ofString())
+      val h = at("/health")
+      assert(h.statusCode === 503, h.body)
+      assert(fieldOf(h.body, "status") === "degraded")
+      assert(h.body.contains("\"catalog\":{\"healthy\":false}"), h.body)
+      val r = at("/ready")
+      assert(r.statusCode === 503, r.body)
+      assert(fieldOf(r.body, "reason") === "unhealthy: catalog")
+    } finally down.stop()
   }
 
   test("table details: reference field names, current snapshot, 404") {

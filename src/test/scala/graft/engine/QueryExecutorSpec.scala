@@ -2,6 +2,9 @@ package graft.engine
 
 import java.util.UUID
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import graft.SparkSuite
 import graft.tables.Tables
 
@@ -210,5 +213,33 @@ class QueryExecutorSpec extends SparkSuite {
   test("health check healthy on live session") {
     val h = GraftEngine.healthCheck(spark)
     assert(h("engine") == "healthy" && h("status") == "healthy")
+  }
+
+  test("health check launches no Spark job") {
+    val sc = spark.sparkContext
+    val group = s"health-no-job-${UUID.randomUUID()}"
+    sc.setJobGroup(group, "health check job count", interruptOnCancel = false)
+    val sentinel =
+      try {
+        (1 to 3).foreach { _ =>
+          assert(GraftEngine.healthCheck(spark)("status") == "healthy")
+        }
+        val f = sc.parallelize(Seq(1), 1).countAsync()
+        Await.result(f, 60.seconds)
+        f.jobIds.head
+      } finally sc.clearJobGroup()
+    // the status store takes listener events in order: once it has the
+    // sentinel, it has every job the group started before it
+    val deadline = System.nanoTime() + 30.seconds.toNanos
+    while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinel) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(group).toSeq == Seq(sentinel))
+  }
+
+  test("health check degrades when the catalog is unreachable") {
+    val h = GraftEngine.healthCheck(UnreachableCatalog.session(spark))
+    assert(h("engine") == "healthy", h)
+    assert(h("catalog") == "unhealthy", h)
+    assert(h("status") == "degraded", h)
   }
 }
