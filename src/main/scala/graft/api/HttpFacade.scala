@@ -3511,7 +3511,10 @@ object HttpFacade {
   }
 
   /** Serve the fixture tables over HTTP (blocking until killed):
-    * `runMain graft.api.HttpFacade [port]`. */
+    * `runMain graft.api.HttpFacade [port]`. Starting launches no Spark
+    * job: the one-file fixture tables take their schemas from parquet
+    * footers read on the driver (see `Tables.readParquet`),
+    * and `/ready` runs none either. */
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.{call_function, lit}
 
@@ -55,53 +56,50 @@ object GraftFunctions {
       s"$what must be a string literal, got $other")
   }
 
-  /** Register all graft_* functions in the session (idempotent). */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_vec_dot" -> ((c: Seq[Expression]) => VecDot(c(0), c(1))),
+    "graft_vec_norm" -> ((c: Seq[Expression]) => VecNorm(c(0))),
+    "graft_vec_cosine" -> ((c: Seq[Expression]) => VecCosine(c(0), c(1))),
+    "graft_lsh_bands" -> ((c: Seq[Expression]) => LshBands(c(0),
+        literalInt(c(1), "planes"), literalInt(c(2), "rowsPerBand"))),
+    "graft_minhash_sig" -> ((c: Seq[Expression]) => MinHashSig(c(0),
+        literalInt(c(1), "numHashes"), literalLong(c(2), "seed"))),
+    "graft_simhash64" -> ((c: Seq[Expression]) => SimHash64(c(0),
+        if (c.length > 1) literalHashMode(c(1), "mode") else false)),
+    "graft_word_shingles" -> ((c: Seq[Expression]) => WordShingleHash(c(0),
+        literalInt(c(1), "n"))),
+    "graft_winnow" -> ((c: Seq[Expression]) => Winnow(c(0),
+        literalInt(c(1), "k"), literalInt(c(2), "window"),
+        if (c.length > 3) literalHashMode(c(3), "mode") else false)),
+    "graft_lang_id" -> ((c: Seq[Expression]) =>
+        LangIdExpr(c(0), graft.ops.TextAnalysis.stopwordProfiles.toSeq)),
+    "graft_text_stats" -> ((c: Seq[Expression]) => TextStatsExpr(c(0))),
+    "graft_gopher_stats" -> ((c: Seq[Expression]) => GopherStatsExpr(c(0))),
+    "graft_quantize_int8" -> ((c: Seq[Expression]) => QuantizeInt8Expr(c(0))),
+    "graft_gram_products" -> ((c: Seq[Expression]) => GramProducts(c(0))),
+    "graft_char_pairs" -> ((c: Seq[Expression]) => CharPairsExpr(c(0))),
+    "graft_anchor_hashes" -> ((c: Seq[Expression]) => AnchorHashes(c(0),
+        literalInt(c(1), "k"))),
+    "graft_bpe_segment" -> ((c: Seq[Expression]) => BpeSegmentExpr(c(0),
+        literalMerges(c(1), "merges"))),
+    "graft_wrapped_token_pairs" -> ((c: Seq[Expression]) => WrappedTokenPairs(c(0)))
+  )
+
+  /** Register all graft_* functions in the session. Each is registered
+    * once per function registry: a later call finds it and leaves it in
+    * place, so the ~40 operator call sites do not each replace every
+    * builder (Spark logs a warning per replacement). `newSession()` starts
+    * from a fresh registry and registers again; `cloneSession()` copies the
+    * registry and keeps them. The registry's own lock makes the check and
+    * the registration one step. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_vec_dot",
-      (c: Seq[Expression]) => VecDot(c(0), c(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_vec_norm",
-      (c: Seq[Expression]) => VecNorm(c(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_vec_cosine",
-      (c: Seq[Expression]) => VecCosine(c(0), c(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bands",
-      (c: Seq[Expression]) => LshBands(c(0),
-        literalInt(c(1), "planes"), literalInt(c(2), "rowsPerBand")), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      (c: Seq[Expression]) => MinHashSig(c(0),
-        literalInt(c(1), "numHashes"), literalLong(c(2), "seed")), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      (c: Seq[Expression]) => SimHash64(c(0),
-        if (c.length > 1) literalHashMode(c(1), "mode") else false), "built-in")
-    reg.createOrReplaceTempFunction("graft_word_shingles",
-      (c: Seq[Expression]) => WordShingleHash(c(0),
-        literalInt(c(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      (c: Seq[Expression]) => Winnow(c(0),
-        literalInt(c(1), "k"), literalInt(c(2), "window"),
-        if (c.length > 3) literalHashMode(c(3), "mode") else false), "built-in")
-    reg.createOrReplaceTempFunction("graft_lang_id",
-      (c: Seq[Expression]) =>
-        LangIdExpr(c(0), graft.ops.TextAnalysis.stopwordProfiles.toSeq),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_text_stats",
-      (c: Seq[Expression]) => TextStatsExpr(c(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_gopher_stats",
-      (c: Seq[Expression]) => GopherStatsExpr(c(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_quantize_int8",
-      (c: Seq[Expression]) => QuantizeInt8Expr(c(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_products",
-      (c: Seq[Expression]) => GramProducts(c(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_pairs",
-      (c: Seq[Expression]) => CharPairsExpr(c(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_anchor_hashes",
-      (c: Seq[Expression]) => AnchorHashes(c(0),
-        literalInt(c(1), "k")), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_segment",
-      (c: Seq[Expression]) => BpeSegmentExpr(c(0),
-        literalMerges(c(1), "merges")), "built-in")
-    reg.createOrReplaceTempFunction("graft_wrapped_token_pairs",
-      (c: Seq[Expression]) => WrappedTokenPairs(c(0)), "built-in")
+    reg.synchronized {
+      builders.foreach { case (name, builder) =>
+        if (!reg.functionExists(FunctionIdentifier(name)))
+          reg.createOrReplaceTempFunction(name, builder, "built-in")
+      }
+    }
   }
 
   // Column-API wrappers (caller must have registered on the session that

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions.{coalesce, lit, pmod}
  * `lit(0)` partition key is stripped by Spark 4's
  * `EliminateWindowPartitions` optimizer rule (SPARK-46941), which would
  * silently restore the bare unpartitioned window and its warning.
- * `anchor` can be ANY column of the table (nulls are fine — the
- * coalesce keeps the key 0, never a second null group); callers pass
+ * `anchor` can be any integral column of the table (nulls are fine —
+ * the coalesce keeps the key 0, never a second null group); callers pass
  * their first ordering column. PlanSpec pins the resulting plan shape,
  * so a future Spark version folding this form fails CI loudly rather
  * than degrading silently.
@@ -42,8 +42,11 @@ import org.apache.spark.sql.functions.{coalesce, lit, pmod}
  * comment at each call site is where that proof lives.
  */
 object BoundedWindow {
-  /** Single-group ordered window over a bounded table; `anchor` is any
-    * column of that table (used only to defeat constant folding). */
+  /** Single-group ordered window over a bounded table; `anchor` is a
+    * column of that table, used only to defeat constant folding. It must
+    * be integral: the key casts it to long, and under ANSI mode that cast
+    * throws on a non-numeric string (and on a fractional value outside the
+    * long range). */
   def orderBy(anchor: Column, cols: Column*): WindowSpec =
     Window.partitionBy(pmod(coalesce(anchor.cast("long"), lit(0L)), lit(1L)))
       .orderBy(cols: _*)

@@ -1502,6 +1502,11 @@ object PipelineOps {
       // is over already-deduped rows (identical sketch rows), and
       // count_distinct(v) over the deduped set equals it over the raw
       // explode by definition of distinct
+      // Stored set size: one row per distinct (shard, trigram), so at most
+      // 8 x the corpus's distinct trigrams and never more than the
+      // explode's rows; it grows with the corpus. It is kept as shuffle
+      // partitions of executor-local blocks (memory and disk), so no one
+      // task or the driver holds it, and it is read twice below.
       val dv = tri.distinct().localCheckpoint(true)
       Sketches.kmvSketch(dv, "v", "shard", k)
         .write.mode("overwrite").parquet(base)

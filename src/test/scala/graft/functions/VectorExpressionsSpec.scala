@@ -20,6 +20,20 @@ class VectorExpressionsSpec extends SparkSuite {
     }.toDF("id", "a", "b")
   }
 
+  test("register adds the functions once per registry") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    def registered = reg.listFunction().filter(_.funcName.startsWith("graft_"))
+    assert(registered.isEmpty)
+    GraftFunctions.register(s)
+    val first = registered.map(id => id -> reg.lookupFunction(id).get)
+    assert(first.nonEmpty)
+    GraftFunctions.register(s)
+    first.foreach { case (id, info) =>
+      assert(reg.lookupFunction(id).get eq info, s"$id was replaced")
+    }
+  }
+
   test("vec_dot / vec_norm / vec_cosine match the HOF reference forms") {
     val out = vecs.select(
       GraftFunctions.vecDot(col("a"), col("b")).as("d1"),
