@@ -4,12 +4,18 @@ import java.io.OutputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType,
+  IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructType}
 
+import graft.api.HttpFacade.Reject
 import graft.catalog.{CatalogProvider, SparkCatalogProvider}
-import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor, QueryState}
+import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor, QueryResult,
+  QueryState}
 import graft.results.{ResultStream, ValueFormat}
 import graft.tables.Tables
 
@@ -31,7 +37,8 @@ import graft.tables.Tables
  *           surfaced as a wire format; sql-only)
  *  - GET    /api/v1/catalog/namespaces[?parent=]    (catalog.py:41, 404 on
  *           unknown parent; parent accepts unit-separator or dotted form)
- *  - GET    /api/v1/catalog/namespaces/{ns}/tables  (catalog.py:106)
+ *  - GET    /api/v1/catalog/namespaces/{ns}/tables  (catalog.py:106, 404 on
+ *           unknown namespace)
  *  - GET    /api/v1/catalog/tables/{ns}.{t}/schema  (catalog.py:184)
  *  - GET    /api/v1/catalog/tables/{ns}.{t}         (catalog.py:291, full
  *           details: location, partition spec, snapshots, current snapshot)
@@ -44,9 +51,28 @@ import graft.tables.Tables
  * reference uses a unit-separator wire encoding for the same purpose —
  * see graft.catalog.NamespacePath).
  *
+ * Validation: every handler reads its request through the readers in the
+ * "validation" section — `table` (the route's own `{tablePath}`),
+ * `stored` (a table named by a parameter), `Params.required`/`int`/
+ * `long`/`threshold`/`list`, and the column checks — each an
+ * `Either[Reject, A]`, chained in one `for` whose first failing check
+ * wins, so a route's check order is the order it reads in. The codes:
+ * 400 for a malformed body, a missing, unparsable or out-of-range
+ * parameter, an undotted table path, or a column that is unknown or of
+ * the wrong type; 404 for an unknown table (the route's own table is
+ * checked before any parameter), an unknown stored artifact or an unknown
+ * query id; 413 for a corpus over a build route's `max_rows` cap. An
+ * operator's own argument check (IllegalArgumentException) is the caller's
+ * error, a 400. [[reply]] sends the outcome — `Left` as `{"detail": msg}`
+ * under its code, `Right` as the 200 JSON body — and maps a catalog
+ * NoSuchEntityException raised anywhere in the handler to a 404: only a
+ * genuine not-found is a 404; anything else (corrupt metadata JSON, IO
+ * failure) surfaces as the route-level 500. The streaming routes
+ * (results, CSV, Arrow) read the same way and write their own 200 body.
+ *
  * Concurrency: requests run on a fixed pool; the engine layers are
  * thread-safe (SURVEY §7.5(6) — Spark inverts the reference's serialized
- * single-connection model).
+ * single-connection model). [[stop]] shuts the pool down with the server.
  *
  * Sockets: accepted connections set TCP_NODELAY. The JDK server writes a
  * response as two segments (`sendResponseHeaders`, then the body), so with
@@ -62,19 +88,26 @@ final class HttpFacade(
     executor: QueryExecutor,
     provider: CatalogProvider) {
 
-  private var server: HttpServer = _
+  private type Read[A] = Either[Reject, A]
 
-  /** Start on `port` (0 = ephemeral); returns the bound port. */
+  private var server: HttpServer = _
+  private var pool: ExecutorService = _
+
+  /** Start on `port` (0 = ephemeral) and return the bound port. */
   def start(port: Int = 0, threads: Int = 8): Int = {
     System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.setExecutor(Executors.newFixedThreadPool(threads))
+    pool = Executors.newFixedThreadPool(threads, HttpFacade.poolThread(_))
+    server.setExecutor(pool)
     server.createContext("/", (ex: HttpExchange) => route(ex))
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) pool.shutdown()
+  }
 
   // ---- op-route persisted-RDD accounting --------------------------------
 
@@ -217,138 +250,101 @@ final class HttpFacade(
 
   // ---------------------------------------------------------------- handlers
 
-  private def execute(ex: HttpExchange): Unit = {
-    val body = Json.parseObject(readBody(ex))
-    body.get("sql") match {
-      case Some(sql: String) =>
-        val timeout = body.get("timeout").collect { case n: Long => n.toInt }
-        try {
-          val r = executor.execute(sql, timeout)
-          sendJson(ex, 200, Json.obj(
-            "query_id" -> r.queryId.toString, "status" -> r.state.value))
-        } catch {
-          case e: InvalidSqlError => sendJson(ex, 400, detail(e.getMessage))
-          case e: Exception => sendJson(ex, 500, detail(e.getMessage))
-        }
-      case _ => sendJson(ex, 400, detail("Field 'sql' is required"))
-    }
+  private def execute(ex: HttpExchange): Unit = reply(ex) {
+    for {
+      body <- jsonBody(ex)
+      sql <- field(body, "sql").toRight(bad("Field 'sql' is required"))
+      timeout = body.get("timeout").collect { case n: Long => n.toInt }
+      r <- gated(executor.execute(sql, timeout))(_.getMessage)
+    } yield Json.obj("query_id" -> r.queryId.toString, "status" -> r.state.value)
   }
 
-  private def status(ex: HttpExchange, id: String): Unit =
-    withQueryId(ex, id) { uuid =>
-      executor.getStatus(uuid) match {
-        case None => sendJson(ex, 404, detail(s"Query not found: $id"))
-        case Some(r) =>
-          val rows: Option[Long] =
-            if (r.state == QueryState.Completed) Some(r.metrics.rowsReturned)
-            else None
-          sendJson(ex, 200, Json.obj(
-            "query_id" -> id, "status" -> r.state.value,
-            "rows_processed" -> rows.orNull,
-            "error_message" -> r.errorMessage.orNull))
-      }
+  private def status(ex: HttpExchange, id: String): Unit = reply(ex) {
+    queryResult(id).map { r =>
+      val rows: Option[Long] =
+        if (r.state == QueryState.Completed) Some(r.metrics.rowsReturned)
+        else None
+      Json.obj(
+        "query_id" -> id, "status" -> r.state.value,
+        "rows_processed" -> rows.orNull,
+        "error_message" -> r.errorMessage.orNull)
     }
+  }
 
   private def results(ex: HttpExchange, id: String): Unit = {
-    val q = queryParams(ex)
-    def int(name: String, dflt: Int): Either[String, Int] =
-      q.get(name).fold(Option(dflt))(_.toIntOption)
-        .toRight(s"$name must be an integer")
-    val parsed = for {
-      pageSize <- int("page_size", 100)
-      offset <- int("offset", 0)
-      _ <- Either.cond(offset >= 0, (), "offset must be non-negative")
-      _ <- Either.cond(ResultStream.ValidPageSizes.contains(pageSize), (),
+    val q = params(ex)
+    stream(ex)(for {
+      pageSize <- q.int("page_size", 100)
+      offset <- q.int("offset", 0)
+      _ <- check(offset >= 0, "offset must be non-negative")
+      _ <- check(ResultStream.ValidPageSizes.contains(pageSize),
         "Invalid page_size. Must be one of: " +
           ResultStream.ValidPageSizes.toSeq.sorted.mkString("[", ", ", "]"))
-    } yield (pageSize, offset)
-    parsed match {
-      case Left(msg) => sendJson(ex, 400, detail(msg))
-      case Right((pageSize, offset)) =>
-        val lines = ResultStream.ndjsonAwait(
-          () => parseUuid(id).flatMap(executor.getStatus), id, pageSize, offset)
-        ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-        ex.sendResponseHeaders(200, 0)
-        val out = ex.getResponseBody
-        lines.foreach { l => out.write(l.getBytes(UTF_8)); out.write('\n') }
-        out.close()
+    } yield (pageSize, offset)) { case (pageSize, offset) =>
+      val lines = ResultStream.ndjsonAwait(
+        () => parseUuid(id).flatMap(executor.getStatus), id, pageSize, offset)
+      ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
+      ex.sendResponseHeaders(200, 0)
+      val out = ex.getResponseBody
+      lines.foreach { l => out.write(l.getBytes(UTF_8)); out.write('\n') }
+      out.close()
     }
   }
 
-  private def cancel(ex: HttpExchange, id: String): Unit =
-    withQueryId(ex, id) { uuid =>
-      executor.getStatus(uuid) match {
-        case None => sendJson(ex, 404, detail(s"Query not found: $id"))
-        case Some(_) =>
-          val was = executor.cancel(uuid)
-          val cur = executor.getStatus(uuid).map(_.state.value).getOrElse("unknown")
-          sendJson(ex, 200, Json.obj(
-            "query_id" -> id, "cancelled" -> was, "status" -> cur))
+  private def cancel(ex: HttpExchange, id: String): Unit = reply(ex) {
+    queryResult(id).map { r =>
+      val was = executor.cancel(r.queryId)
+      val cur = executor.getStatus(r.queryId).map(_.state.value)
+        .getOrElse("unknown")
+      Json.obj("query_id" -> id, "cancelled" -> was, "status" -> cur)
+    }
+  }
+
+  private def cleanup(ex: HttpExchange, id: String): Unit = reply(ex) {
+    queryUuid(id).map { uuid =>
+      executor.cleanup(uuid)
+      Json.obj("query_id" -> id, "cleaned" -> true)
+    }
+  }
+
+  private def exportCsv(ex: HttpExchange): Unit = stream(ex) {
+    jsonBody(ex).flatMap { body =>
+      (field(body, "sql"), field(body, "query_id")) match {
+        case (None, None) => Left(bad("Either query_id or sql must be provided"))
+        case (Some(_), Some(_)) =>
+          Left(bad("Provide either query_id or sql, not both"))
+        case (Some(s), None) =>
+          gated(ResultStream.csvForSql(executor, s))(_ => "Internal server error")
+        case (None, Some(qid)) =>
+          queryResult(qid).flatMap { r =>
+            try Right(ResultStream.csv(r))
+            catch { case e: ResultStream.CsvExportError => Left(bad(e.getMessage)) }
+          }
       }
     }
-
-  private def cleanup(ex: HttpExchange, id: String): Unit =
-    withQueryId(ex, id) { uuid =>
-      executor.cleanup(uuid)
-      sendJson(ex, 200, Json.obj("query_id" -> id, "cleaned" -> true))
-    }
-
-  private def exportCsv(ex: HttpExchange): Unit = {
-    val body = Json.parseObject(readBody(ex))
-    val sql = body.get("sql").collect { case s: String => s }
-    val queryId = body.get("query_id").collect { case s: String => s }
-    (sql, queryId) match {
-      case (None, None) =>
-        sendJson(ex, 400, detail("Either query_id or sql must be provided"))
-      case (Some(_), Some(_)) =>
-        sendJson(ex, 400, detail("Provide either query_id or sql, not both"))
-      case (Some(s), None) =>
-        try streamCsv(ex, ResultStream.csvForSql(executor, s))
-        catch {
-          case e: InvalidSqlError => sendJson(ex, 400, detail(e.getMessage))
-          case _: Exception => sendJson(ex, 500, detail("Internal server error"))
-        }
-      case (None, Some(qid)) =>
-        withQueryId(ex, qid) { uuid =>
-          executor.getStatus(uuid) match {
-            case None => sendJson(ex, 404, detail(s"Query not found: $qid"))
-            case Some(r) =>
-              try streamCsv(ex, ResultStream.csv(r))
-              catch {
-                case e: ResultStream.CsvExportError =>
-                  sendJson(ex, 400, detail(e.getMessage))
-              }
-          }
-        }
-    }
-  }
+  }(streamCsv(ex, _))
 
   /** Columnar export: the gated SQL streamed as an Arrow IPC stream —
     * the reference's columnar result transport (executor.py:254-260)
     * surfaced as a wire format any Arrow client reads directly. sql-only
     * (buffered results live as rows; re-running the plan IS the columnar
     * path — batches stream executor → driver → socket one at a time). */
-  private def exportArrow(ex: HttpExchange): Unit = {
-    val body = Json.parseObject(readBody(ex))
-    body.get("sql").collect { case s: String => s } match {
-      case None => sendJson(ex, 400, detail("sql must be provided"))
-      case Some(s) =>
-        try {
-          val df = executor.dataFrameForExport(s)
-          ex.getResponseHeaders.set("Content-Type",
-            "application/vnd.apache.arrow.stream")
-          ex.getResponseHeaders.set("Content-Disposition",
-            "attachment; filename=\"" +
-              ValueFormat.sanitizeFilename("query_results.arrow") + "\"")
-          ex.sendResponseHeaders(200, 0)
-          val out: OutputStream = ex.getResponseBody
-          org.apache.spark.sql.GraftArrow.writeIpcStream(df, out)
-          out.close()
-        } catch {
-          case e: InvalidSqlError => sendJson(ex, 400, detail(e.getMessage))
-          case _: Exception => sendJson(ex, 500, detail("Internal server error"))
-        }
-    }
+  private def exportArrow(ex: HttpExchange): Unit = stream(ex) {
+    for {
+      body <- jsonBody(ex)
+      sql <- field(body, "sql").toRight(bad("sql must be provided"))
+      df <- gated(executor.dataFrameForExport(sql))(_ => "Internal server error")
+    } yield df
+  } { df =>
+    ex.getResponseHeaders.set("Content-Type",
+      "application/vnd.apache.arrow.stream")
+    ex.getResponseHeaders.set("Content-Disposition",
+      "attachment; filename=\"" +
+        ValueFormat.sanitizeFilename("query_results.arrow") + "\"")
+    ex.sendResponseHeaders(200, 0)
+    val out: OutputStream = ex.getResponseBody
+    org.apache.spark.sql.GraftArrow.writeIpcStream(df, out)
+    out.close()
   }
 
   private def streamCsv(ex: HttpExchange, chunks: Iterator[Array[Byte]]): Unit = {
@@ -368,27 +364,18 @@ final class HttpFacade(
     // (`accounting%1Ftax`); URI.getQuery percent-decodes, so the handler
     // sees the separator directly. A plain dotted path is accepted too (this façade's own
     // path convention).
-    val parent = queryParams(ex).get("parent").filter(_.nonEmpty).map { p =>
+    val parent = params(ex).opt("parent").map { p =>
       if (p.contains(graft.catalog.NamespacePath.UnitSeparator))
         graft.catalog.NamespacePath.parse(p)
       else p.split("\\.").toSeq
     }
-    try sendJson(ex, 200, Json.obj(
-      "namespaces" -> provider.listNamespaces(parent).map(_.mkString("."))))
-    catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    reply(ex)(Right(Json.obj(
+      "namespaces" -> provider.listNamespaces(parent).map(_.mkString(".")))))
   }
 
-  private def tableDetails(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      val d = provider.tableDetails(ns, table)
+  private def tableDetails(ex: HttpExchange, tablePath: String): Unit =
+    reply(ex)(tableRef(tablePath).map { parts =>
+      val d = provider.tableDetails(parts.init, parts.last)
       // Field names mirror the reference's TableDetails/Snapshot/
       // PartitionSpec response models (ref models/catalog.py:69-192,
       // routes/catalog.py:291-373): sort_order is always null there for
@@ -403,7 +390,7 @@ final class HttpFacade(
           Json.Raw(Json.obj("source_id" -> f.sourceId, "field_id" -> f.fieldId,
             "name" -> f.name, "transform" -> f.transform)))))
       }.orNull
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "namespace" -> d.namespace,
         "name" -> d.table,
         "location" -> d.location,
@@ -411,42 +398,24 @@ final class HttpFacade(
         "partition_spec" -> spec,
         "sort_order" -> null,
         "current_snapshot" -> d.currentSnapshot.map(snapJson).orNull,
-        "snapshots" -> d.snapshots.map(snapJson)))
-    } catch {
-      // only a genuine not-found is a 404; anything else (corrupt metadata
-      // JSON, IO failure) must surface as the route-level 500, not
-      // masquerade as a missing table
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
+        "snapshots" -> d.snapshots.map(snapJson))
+    })
 
-  private def tables(ex: HttpExchange, ns: String): Unit = {
-    val parts = ns.split("\\.").toSeq
-    sendJson(ex, 200, Json.obj(
-      "namespace" -> ns, "tables" -> provider.listTables(parts)))
-  }
+  private def tables(ex: HttpExchange, ns: String): Unit =
+    reply(ex)(Right(Json.obj(
+      "namespace" -> ns, "tables" -> provider.listTables(ns.split("\\.").toSeq))))
 
-  private def schema(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      val info = provider.tableSchema(ns, table)
-      sendJson(ex, 200, Json.obj(
+  private def schema(ex: HttpExchange, tablePath: String): Unit =
+    reply(ex)(tableRef(tablePath).map { parts =>
+      val info = provider.tableSchema(parts.init, parts.last)
+      Json.obj(
         "namespace" -> info.namespace.mkString("."),
         "table" -> info.table,
         "fields" -> info.fields.map(f => Json.Raw(Json.obj(
           "name" -> f.name, "type" -> f.dataType,
           "nullable" -> f.nullable,
-          "is_partition_column" -> f.isPartitionColumn)))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
+          "is_partition_column" -> f.isPartitionColumn))))
+    })
 
   /** Content profile of a catalog table: one row per column with exact
     * count / null / distinct / min-max / sum-len statistics
@@ -458,51 +427,35 @@ final class HttpFacade(
     * even though the scan is table-sized — at warehouse scale submit the
     * same operator through the async query path instead. */
   private def profileRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val profilable = df.schema.fields.filter(_.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.MapType |
-             _: org.apache.spark.sql.types.StructType => false
+    val q = params(ex)
+    // ?group_by=<col> switches to the per-stratum report
+    // (Profile.profileBy); the group column must exist and may not be
+    // the only profiled column
+    val groupBy = q.raw.get("group_by")
+    reply(ex)(for {
+      df <- table(tablePath)
+      profilable = df.schema.fields.filter(_.dataType match {
+        case _: ArrayType | _: MapType | _: StructType => false
         case _ => true
       }).map(_.name).toSeq
-      val cols = queryParams(ex).get("columns").filter(_.nonEmpty)
+      cols = q.opt("columns")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(profilable)
       // validate against the PROFILABLE set, not the full schema — an
       // explicitly requested nested-type column must 400, not surface a
       // raw AnalysisException as a 500
-      val unknown = cols.filterNot(profilable.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown or non-profilable columns: ${unknown.mkString(", ")}")); return
-      }
-      if (cols.isEmpty) {
-        sendJson(ex, 400, detail("No profilable columns")); return
-      }
+      unknown = cols.filterNot(profilable.contains)
+      _ <- check(unknown.isEmpty,
+        s"Unknown or non-profilable columns: ${unknown.mkString(", ")}")
+      _ <- check(cols.nonEmpty, "No profilable columns")
+      _ <- check(groupBy.forall(df.columns.contains),
+        s"Unknown group_by column: ${groupBy.get}")
+      _ <- check(groupBy.forall(g => cols.exists(_ != g)),
+        "group_by needs at least one other profiled column")
+    } yield {
       // ?approx=true swaps exact count-distinct for HLL++ — the sane
       // default for warehouse-sized tables (see Profile.profile)
-      val approx = queryParams(ex).get("approx").contains("true")
-      // ?group_by=<col> switches to the per-stratum report
-      // (Profile.profileBy); the group column must exist and may not be
-      // the only profiled column
-      val groupBy = queryParams(ex).get("group_by")
-      if (groupBy.exists(g => !df.columns.contains(g))) {
-        sendJson(ex, 400,
-          detail(s"Unknown group_by column: ${groupBy.get}")); return
-      }
-      if (groupBy.exists(g => cols.filterNot(_ == g).isEmpty)) {
-        sendJson(ex, 400,
-          detail("group_by needs at least one other profiled column")); return
-      }
+      val approx = q.raw.get("approx").contains("true")
       val rows = groupBy match {
         case Some(g) =>
           graft.ops.Profile.profileBy(df, g, cols.filterNot(_ == g), approx)
@@ -510,7 +463,7 @@ final class HttpFacade(
         case None => graft.ops.Profile.profile(df, cols, approx).collect()
       }
       val off = if (groupBy.isDefined) 1 else 0
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
         "profile" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           (Seq("column" -> (r.getString(off): Any),
@@ -519,13 +472,9 @@ final class HttpFacade(
             "n_distinct" -> r.getLong(off + 3),
             "min" -> r.getString(off + 4),
             "max" -> r.getString(off + 5),
-            "sum_len" -> (if (r.isNullAt(off + 6)) null
-                          else java.lang.Long.valueOf(r.getLong(off + 6)))) ++
-            groupBy.map(_ => "group" -> (r.getString(0): Any)).toSeq): _*)))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+            "sum_len" -> optLong(r, off + 6)) ++
+            groupBy.map(_ => "group" -> (r.getString(0): Any)).toSeq): _*))))
+    })
   }
 
   /** Training-mix allocation over a catalog table
@@ -535,85 +484,38 @@ final class HttpFacade(
     * plus a domain-count-sized closed form). Domain cardinality bounds
     * the response, same `maxLabels` contract as the balance route. */
   private def mixtureRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val domain = qp.get("domain").filter(_.nonEmpty)
-      val weight = qp.get("weight").filter(_.nonEmpty)
-      val budget = qp.get("budget").flatMap(_.toLongOption)
-      val epochs = qp.get("epochs").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("epochs must be an integer")); return
-        case Some(Some(e)) => e
-        case None => 2
-      }
-      if (domain.isEmpty || weight.isEmpty) {
-        sendJson(ex, 400,
-          detail("domain and weight parameters are required")); return
-      }
-      if (budget.isEmpty || budget.exists(_ < 0)) {
-        sendJson(ex, 400,
-          detail("budget parameter is required and must be >= 0")); return
-      }
-      if (epochs < 1) {
-        sendJson(ex, 400, detail("epochs must be >= 1")); return
-      }
-      val unknown = Seq(domain.get, weight.get)
-        .filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      val numeric = df.schema(weight.get).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      if (!numeric) {
-        sendJson(ex, 400,
-          detail(s"Weight column ${weight.get} is not numeric")); return
-      }
+    val q = params(ex)
+    val (domain, weight) = (q("domain"), q("weight"))
+    val maxLabels = 1000
+    reply(ex)(for {
+      df <- table(tablePath)
+      epochs <- q.int("epochs", 2)
+      _ <- q.required("domain", "weight")
+      budget <- budgetOf(q)
+      _ <- within("epochs", epochs, 1)
+      _ <- columns(df, domain, weight)
+      _ <- numericColumn(df, weight, "Weight")
       // same convention as balanceRoute: a non-groupable domain column
       // is a caller error, not a surfaced AnalysisException
-      val groupable = df.schema(domain.get).dataType match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      }
-      if (!groupable) {
-        sendJson(ex, 400, detail(
-          s"Column ${domain.get} is not groupable (map type)")); return
-      }
-      val maxLabels = 1000
-      val rows = graft.ops.Sampling.mixtureAllocation(df, domain.get,
-          weight.get, org.apache.spark.sql.functions.expr(s"avail * $epochs"),
-          budget.get)
+      _ <- groupableColumn(df, domain)
+      rows = graft.ops.Sampling.mixtureAllocation(df, domain, weight,
+          org.apache.spark.sql.functions.expr(s"avail * $epochs"), budget)
         .limit(maxLabels + 1).collect()
-      if (rows.length > maxLabels) {
-        sendJson(ex, 400, detail(
-          s"Column ${domain.get} has more than $maxLabels distinct " +
-            "values — mixture reports are for domain-like columns")); return
-      }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "domain" -> domain.get,
-        "weight" -> weight.get,
-        "budget" -> budget.get,
-        "epochs_cap" -> epochs.toLong,
-        "allocation" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "domain" -> (if (r.isNullAt(0)) null else String.valueOf(r.get(0))),
-          "avail" -> r.getLong(1),
-          "cap" -> r.getLong(2),
-          "alloc" -> r.getLong(3),
-          "epochs_ppm" -> r.getLong(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+      _ <- check(rows.length <= maxLabels,
+        s"Column $domain has more than $maxLabels distinct " +
+          "values — mixture reports are for domain-like columns")
+    } yield Json.obj(
+      "table" -> tablePath,
+      "domain" -> domain,
+      "weight" -> weight,
+      "budget" -> budget,
+      "epochs_cap" -> epochs.toLong,
+      "allocation" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "domain" -> (if (r.isNullAt(0)) null else String.valueOf(r.get(0))),
+        "avail" -> r.getLong(1),
+        "cap" -> r.getLong(2),
+        "alloc" -> r.getLong(3),
+        "epochs_ppm" -> r.getLong(4))))))
   }
 
   /** Dedup-threshold sensitivity sweep over any catalog table
@@ -623,85 +525,44 @@ final class HttpFacade(
     * min-id dedup would drop, and the drop rate in ppm. The similarity
     * join runs once at the lowest candidate; the response is one bounded
     * row per threshold (the audit a curation UI reads before committing
-    * to a threshold). Validation follows the mixture-route conventions:
-    * 400 for missing/unknown/ill-typed params, 404 for unknown tables. */
+    * to a threshold). */
   private def dedupSweepRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400,
-          detail("text and id parameters are required")); return
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val integral = df.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!integral) {
-        sendJson(ex, 400,
-          detail(s"Id column ${idCol.get} is not an integral column"))
-        return
-      }
-      val thresholds = qp.get("thresholds") match {
-        case None => Seq(0.5, 0.6, 0.7, 0.8, 0.9)
-        case Some(raw) =>
+    val q = params(ex)
+    val (textCol, idCol) = (q("text"), q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("text", "id")
+      _ <- columns(df, textCol, idCol)
+      _ <- stringColumn(df, textCol)
+      _ <- integralColumn(df, idCol)
+      thresholds <- q.raw.get("thresholds")
+        .fold[Read[Seq[Double]]](Right(Seq(0.5, 0.6, 0.7, 0.8, 0.9))) { raw =>
           val parsed = raw.split(",").toSeq.map(_.trim).map(_.toDoubleOption)
-          if (parsed.exists(_.isEmpty) || parsed.isEmpty) {
-            sendJson(ex, 400, detail(
-              "thresholds must be a comma-separated list of numbers"))
-            return
-          }
-          val ts = parsed.flatten
-          if (ts.exists(t => t <= 0.0 || t > 1.0) || ts.length > 16) {
-            sendJson(ex, 400, detail(
-              "thresholds must be in (0, 1], at most 16 values")); return
-          }
-          ts
-      }
+          for {
+            _ <- check(parsed.nonEmpty && parsed.forall(_.isDefined),
+              "thresholds must be a comma-separated list of numbers")
+            ts = parsed.flatten
+            _ <- check(!ts.exists(t => t <= 0.0 || t > 1.0) && ts.length <= 16,
+              "thresholds must be in (0, 1], at most 16 values")
+          } yield ts
+        }
+    } yield {
       // thresholdSweep localCheckpoints its shared pair set — release it
       // under the op-sweep discipline (withOpSweep)
       val rows = withOpSweep {
-        graft.ops.Dedup.thresholdSweep(df, textCol.get, idCol.get,
-          thresholds).collect()
+        graft.ops.Dedup.thresholdSweep(df, textCol, idCol, thresholds).collect()
       }
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "text" -> textCol.get,
-        "id" -> idCol.get,
+        "text" -> textCol,
+        "id" -> idCol,
         "sweep" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           "threshold" -> r.getDouble(0),
           "n_pairs" -> r.getLong(1),
           "n_docs_touched" -> r.getLong(2),
           "n_dropped" -> r.getLong(3),
-          "drop_ppm" -> r.getLong(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "drop_ppm" -> r.getLong(4)))))
+    })
   }
 
   /** Substring-level (ExactSubstr) dedup excision audit over any catalog
@@ -713,81 +574,22 @@ final class HttpFacade(
     * committing) plus the `limit` most-affected documents by
     * (n_dropped desc, id), default 100, cap 1000. `kept_text` is
     * deliberately NOT served: the excised corpus is a dataset to write,
-    * not a payload (the epoch-plan route's argument). Validation follows
-    * the dedup-sweep conventions: 400 for missing/unknown/ill-typed
-    * params, 404 for unknown tables. */
+    * not a payload (the epoch-plan route's argument). */
   private def substringDedupRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400,
-          detail("text and id parameters are required")); return
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val integral = df.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!integral) {
-        sendJson(ex, 400,
-          detail(s"Id column ${idCol.get} is not an integral column"))
-        return
-      }
-      val anchor = qp.get("anchor").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("anchor must be an integer")); return
-        case Some(Some(a)) => a
-        case None => 5
-      }
-      if (anchor < 1 || anchor > 64) {
-        sendJson(ex, 400, detail("anchor must be between 1 and 64")); return
-      }
-      val maxDocFreq = qp.get("max_doc_freq").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("max_doc_freq must be an integer")); return
-        case Some(Some(m)) => m
-        case None => 1
-      }
-      if (maxDocFreq < 1) {
-        sendJson(ex, 400, detail("max_doc_freq must be >= 1")); return
-      }
-      val limit = qp.get("limit").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("limit must be an integer")); return
-        case Some(Some(l)) => l
-        case None => 100
-      }
-      if (limit < 0 || limit > 1000) {
-        sendJson(ex, 400,
-          detail("limit must be between 0 and 1000")); return
-      }
-      import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-      withOpSweep {
-      val rep = graft.ops.Dedup.substringDedup(df, textCol.get, idCol.get,
+    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+    val q = params(ex)
+    val (textCol, idCol) = (q("text"), q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("text", "id")
+      _ <- columns(df, textCol, idCol)
+      _ <- stringColumn(df, textCol)
+      _ <- integralColumn(df, idCol)
+      anchor <- q.int("anchor", 5, 1, 64)
+      maxDocFreq <- q.int("max_doc_freq", 1, lo = 1)
+      limit <- q.int("limit", 100, 0, 1000)
+    } yield withOpSweep {
+      val rep = graft.ops.Dedup.substringDedup(df, textCol, idCol,
         anchor, maxDocFreq).drop("kept_text").persist()
       try {
         val r = rep.agg(
@@ -804,10 +606,10 @@ final class HttpFacade(
           if (totWords == 0L) 0L else 1000000L * totDropped / totWords
         val sample = rep
           .orderBy(col("n_dropped").desc, col("id")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
+        Json.obj(
           "table" -> tablePath,
-          "text" -> textCol.get,
-          "id" -> idCol.get,
+          "text" -> textCol,
+          "id" -> idCol,
           "anchor_words" -> anchor.toLong,
           "max_doc_freq" -> maxDocFreq.toLong,
           "n_docs" -> nDocs,
@@ -820,13 +622,68 @@ final class HttpFacade(
             "id" -> String.valueOf(row.get(0)),
             "n_words" -> row.getLong(1),
             "n_dropped" -> row.getLong(2),
-            "n_spans" -> row.getLong(3))))))
+            "n_spans" -> row.getLong(3)))))
       } finally rep.unpersist()
-      }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    })
+  }
+
+  /** The corpus-build parameter set shared by the data-card and
+    * incremental-build routes. */
+  private case class BuildParams(
+      text: String, id: String, domain: String, length: String,
+      budget: Long, epochs: Int, crossT: Double, dedupT: Double,
+      minQ: Double, langs: Seq[String])
+
+  /** Read the corpus-build request surface (columns, budget, epochs,
+    * curation thresholds, langs, and the max_rows scale guard) against
+    * `df`'s schema, in the order HttpFacadeSpec pins for the data card.
+    * `budgetDefault` differs per route: the full build spends 70 k by
+    * default, an increment spends its own 20 k. */
+  private def buildParams(q: Params, df: DataFrame,
+      budgetDefault: Long): Read[BuildParams] = {
+    val (text, id, domain, length) =
+      (q("text"), q("id"), q("domain"), q("length"))
+    for {
+      _ <- q.required("text", "id", "domain", "length")
+      _ <- columns(df, text, id, domain, length)
+      _ <- stringColumn(df, text)
+      _ <- integralColumn(df, id)
+      _ <- numericColumn(df, length, "Length")
+      _ <- groupableColumn(df, domain)
+      budget <- q.long("budget", Some(budgetDefault), lo = 0)
+      epochs <- q.int("epochs", 2, lo = 1)
+      // curation knobs: the x08/x10 tuning loop drives the capstone
+      // through these — a threshold sweep over the card is how a
+      // release picks its dedup configuration
+      crossT <- q.threshold("cross_threshold", 0.5)
+      dedupT <- q.threshold("dedup_threshold", 0.7)
+      minQ <- q.threshold("min_quality", 0.6)
+      langs <- q.list("langs", Seq("en", "de", "fr"),
+        "langs must be a non-empty comma-separated list")(Some(_))
+      // audit-scale guard: both routes run a FULL p14-shaped composition
+      // (two similarity joins, token counting, transitive dedup)
+      // synchronously inside a GET — refuse corpora beyond the cap so one
+      // request can't pin the session for minutes. The full per-(doc,
+      // copy) plan at scale is a dataset JOB, not a payload.
+      maxRows <- q.long("max_rows", Some(100000L), lo = 1)
+      // the guard itself must not scan the corpus to decide whether
+      // scanning is too expensive: a LIMIT-ed count short-circuits the
+      // scan at maxRows+1 rows (CollectLimit takes partitions
+      // incrementally), so the refusal costs O(maxRows) regardless of
+      // table size — a full df.count() here would read all 100 TB first.
+      // LIMIT takes an Int; a max_rows beyond Int range can't be probed
+      // that way, so the over-2.1B escape hatch falls back to a full
+      // count (the caller explicitly accepted a table of that size — the
+      // count costs a metadata-or-full scan once, not silently refusing
+      // at a clamped cap the caller never asked for)
+      over =
+        if (maxRows < Int.MaxValue.toLong)
+          df.limit(maxRows.toInt + 1).count() > maxRows
+        else df.count() > maxRows
+      _ <- check(!over, s"Table has more than $maxRows rows, " +
+        s"over the data-card cap (raise max_rows to override)", 413)
+    } yield BuildParams(text, id, domain, length, budget, epochs, crossT,
+      dedupT, minQ, langs)
   }
 
   /** Release data card over any catalog table
@@ -838,169 +695,13 @@ final class HttpFacade(
     * the mix realization (docs, copies, tokens, bins, max position).
     * The per-(doc, copy) plan itself is a dataset to write, not a
     * payload (the epoch-plan route's argument) — the card is the
-    * UI-sized summary. Validation follows the substring-dedup
-    * conventions. */
-  /** The corpus-build parameter set shared by the data-card and
-    * incremental-build routes. */
-  private case class BuildParams(
-      text: String, id: String, domain: String, length: String,
-      budget: Long, epochs: Int, crossT: Double, dedupT: Double,
-      minQ: Double, langs: Seq[String])
-
-  /** Parse + validate the corpus-build request surface (columns, budget,
-    * epochs, curation thresholds, langs, and the max_rows scale guard)
-    * against `df`'s schema. Sends the 400/413 response itself and
-    * returns None when the request was rejected; validation order is the
-    * data-card route's original order (pinned by HttpFacadeSpec).
-    * `budgetDefault` differs per route: the full build spends 70 k by
-    * default, an increment spends its own 20 k. */
-  private def buildParams(ex: HttpExchange,
-      df: org.apache.spark.sql.DataFrame,
-      budgetDefault: Long): Option[BuildParams] = {
-    val qp = queryParams(ex)
-    val textCol = qp.get("text").filter(_.nonEmpty)
-    val idCol = qp.get("id").filter(_.nonEmpty)
-    val domainCol = qp.get("domain").filter(_.nonEmpty)
-    val lengthCol = qp.get("length").filter(_.nonEmpty)
-    if (textCol.isEmpty || idCol.isEmpty || domainCol.isEmpty ||
-        lengthCol.isEmpty) {
-      sendJson(ex, 400, detail(
-        "text, id, domain and length parameters are required")); return None
-    }
-    val unknown = Seq(textCol.get, idCol.get, domainCol.get,
-      lengthCol.get).filterNot(df.columns.contains)
-    if (unknown.nonEmpty) {
-      sendJson(ex, 400,
-        detail(s"Unknown columns: ${unknown.mkString(", ")}")); return None
-    }
-    if (df.schema(textCol.get).dataType !=
-        org.apache.spark.sql.types.StringType) {
-      sendJson(ex, 400,
-        detail(s"Text column ${textCol.get} is not a string column"))
-      return None
-    }
-    val integral = df.schema(idCol.get).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (!integral) {
-      sendJson(ex, 400,
-        detail(s"Id column ${idCol.get} is not an integral column"))
-      return None
-    }
-    if (!df.schema(lengthCol.get).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]) {
-      sendJson(ex, 400,
-        detail(s"Length column ${lengthCol.get} is not numeric")); return None
-    }
-    val groupable = df.schema(domainCol.get).dataType match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case _ => true
-    }
-    if (!groupable) {
-      sendJson(ex, 400, detail(
-        s"Column ${domainCol.get} is not groupable (map type)")); return None
-    }
-    val budget = qp.get("budget").map(_.toLongOption) match {
-      case Some(None) => sendJson(ex, 400,
-        detail("budget must be an integer")); return None
-      case Some(Some(b)) => b
-      case None => budgetDefault
-    }
-    if (budget < 0) {
-      sendJson(ex, 400, detail("budget must be >= 0")); return None
-    }
-    val epochs = qp.get("epochs").map(_.toIntOption) match {
-      case Some(None) => sendJson(ex, 400,
-        detail("epochs must be an integer")); return None
-      case Some(Some(e)) => e
-      case None => 2
-    }
-    if (epochs < 1) {
-      sendJson(ex, 400, detail("epochs must be >= 1")); return None
-    }
-    // curation knobs: the x08/x10 tuning loop drives the capstone
-    // through these — a threshold sweep over the card is how a
-    // release picks its dedup configuration
-    def thresholdParam(name: String, dflt: Double): Option[Double] =
-      qp.get(name).map(_.toDoubleOption) match {
-        case Some(None) =>
-          sendJson(ex, 400, detail(s"$name must be a number")); None
-        case Some(Some(t)) if t.isNaN || t <= 0.0 || t > 1.0 =>
-          sendJson(ex, 400, detail(s"$name must be in (0, 1]")); None
-        case Some(Some(t)) => Some(t)
-        case None => Some(dflt)
-      }
-    val crossTOpt = thresholdParam("cross_threshold", 0.5)
-    if (crossTOpt.isEmpty) return None
-    val dedupTOpt = thresholdParam("dedup_threshold", 0.7)
-    if (dedupTOpt.isEmpty) return None
-    val minQOpt = thresholdParam("min_quality", 0.6)
-    if (minQOpt.isEmpty) return None
-    val langs = qp.get("langs") match {
-      case None => Seq("en", "de", "fr")
-      case Some(raw) =>
-        val parsed = raw.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        if (parsed.isEmpty) {
-          sendJson(ex, 400, detail(
-            "langs must be a non-empty comma-separated list")); return None
-        }
-        parsed
-    }
-    // audit-scale guard: both routes run a FULL p14-shaped composition
-    // (two similarity joins, token counting, transitive dedup)
-    // synchronously inside a GET — refuse corpora beyond the cap so one
-    // request can't pin the session for minutes. The full per-(doc,
-    // copy) plan at scale is a dataset JOB, not a payload.
-    val maxRows = qp.get("max_rows").map(_.toLongOption) match {
-      case Some(None) => sendJson(ex, 400,
-        detail("max_rows must be an integer")); return None
-      case Some(Some(m)) => m
-      case None => 100000L
-    }
-    if (maxRows < 1) {
-      sendJson(ex, 400, detail("max_rows must be >= 1")); return None
-    }
-    // the guard itself must not scan the corpus to decide whether
-    // scanning is too expensive: a LIMIT-ed count short-circuits the
-    // scan at maxRows+1 rows (CollectLimit takes partitions
-    // incrementally), so the refusal costs O(maxRows) regardless of
-    // table size — a full df.count() here would read all 100 TB first.
-    // LIMIT takes an Int; a max_rows beyond Int range can't be probed
-    // that way, so the over-2.1B escape hatch falls back to a full
-    // count (the caller explicitly accepted a table of that size — the
-    // count costs a metadata-or-full scan once, not silently refusing
-    // at a clamped cap the caller never asked for)
-    val over =
-      if (maxRows < Int.MaxValue.toLong)
-        df.limit(maxRows.toInt + 1).count() > maxRows
-      else df.count() > maxRows
-    if (over) {
-      sendJson(ex, 413, detail(s"Table has more than $maxRows rows, " +
-        s"over the data-card cap (raise max_rows to override)")); return None
-    }
-    Some(BuildParams(textCol.get, idCol.get, domainCol.get, lengthCol.get,
-      budget, epochs, crossTOpt.get, dedupTOpt.get, minQOpt.get, langs))
-  }
-
+    * UI-sized summary. */
   private def dataCardRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val p = buildParams(ex, df, budgetDefault = 70000L) match {
-        case None => return
-        case Some(v) => v
-      }
+    val q = params(ex)
+    reply(ex)(for {
+      df <- table(tablePath)
+      p <- buildParams(q, df, budgetDefault = 70000L)
+    } yield {
       // release the composition's localCheckpoints when the card is done
       // (op-sweep discipline: see withOpSweep)
       val card = withOpSweep {
@@ -1012,7 +713,7 @@ final class HttpFacade(
             budget = p.budget)).collect()(0)
       }
       val fields = card.schema.fieldNames.zipWithIndex
-      sendJson(ex, 200, Json.obj(Seq[(String, Any)](
+      Json.obj(Seq[(String, Any)](
         "table" -> tablePath,
         "text" -> p.text,
         "id" -> p.id,
@@ -1024,11 +725,8 @@ final class HttpFacade(
         "dedup_threshold" -> p.dedupT,
         "min_quality" -> p.minQ,
         "langs" -> p.langs.mkString(",")) ++
-        fields.map { case (f, i) => f -> card.getLong(i) }: _*))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+        fields.map { case (f, i) => f -> card.getLong(i) }: _*)
+    })
   }
 
   /** Incremental corpus build over any catalog table
@@ -1056,61 +754,31 @@ final class HttpFacade(
     * own docs, copies, tokens, fresh-shard bins) plus `existing_copies`,
     * the position offset the increment appended after: new positions
     * start at `existing_copies` and `max_pos` ends the EXTENDED training
-    * order. Validation follows the data-card conventions (`budget` is
-    * the increment's own spend, default 20 k); the max_rows guard caps
-    * the whole table since both sides are scanned (with `existing` the
-    * corpus side contributes only the id-joined eval/canonical text
-    * reads, but the guard stays conservative — the delta is unbounded
-    * by the split point). */
+    * order. `budget` is the increment's own spend, default 20 k; the
+    * max_rows guard caps the whole table since both sides are scanned
+    * (with `existing` the corpus side contributes only the id-joined
+    * eval/canonical text reads, but the guard stays conservative — the
+    * delta is unbounded by the split point). */
   private def incrementalBuildRoute(ex: HttpExchange,
       tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
+    import org.apache.spark.sql.functions.{col, count, when}
+    val q = params(ex)
+    val existingPath = q.opt("existing")
+    reply(ex)(for {
+      df <- table(tablePath)
+      p <- buildParams(q, df, budgetDefault = 20000L)
+      deltaFrom <- q.long("delta_from")
+      existingBudget <- q.long("existing_budget", Some(70000L), lo = 0)
+      existingTable <- whenGiven(existingPath) { path =>
+        for {
+          _ <- check(!q.raw.contains("existing_budget"), "Provide either " +
+            "existing (a stored build table) or existing_budget (an inline " +
+            "recompute), not both")
+          t <- stored(path, "existing build", Seq("id", "kept", "reason",
+            "split", "w", "copy", "pack_shard", "pack_bin", "pos"))
+        } yield t
       }
-      val df = spark.table(tablePath)
-      val p = buildParams(ex, df, budgetDefault = 20000L) match {
-        case None => return
-        case Some(v) => v
-      }
-      val qp = queryParams(ex)
-      val deltaFrom = qp.get("delta_from").map(_.toLongOption) match {
-        case Some(Some(v)) => v
-        case Some(None) => sendJson(ex, 400,
-          detail("delta_from must be an integer")); return
-        case None => sendJson(ex, 400,
-          detail("delta_from parameter is required")); return
-      }
-      val existingBudget =
-        qp.get("existing_budget").map(_.toLongOption) match {
-          case Some(None) => sendJson(ex, 400,
-            detail("existing_budget must be an integer")); return
-          case Some(Some(b)) if b < 0 => sendJson(ex, 400,
-            detail("existing_budget must be >= 0")); return
-          case Some(Some(b)) => b
-          case None => 70000L
-        }
-      val existingTable = qp.get("existing").filter(_.nonEmpty) match {
-        case None => None
-        case Some(path) =>
-          if (qp.contains("existing_budget")) {
-            sendJson(ex, 400, detail("Provide either existing (a stored " +
-              "build table) or existing_budget (an inline recompute), " +
-              "not both")); return
-          }
-          loadStored(ex, path, "existing build",
-            Seq("id", "kept", "reason", "split", "w", "copy",
-              "pack_shard", "pack_bin", "pos")) match {
-            case None => return
-            case some => some
-          }
-      }
-      import org.apache.spark.sql.functions.{col, count, when}
+    } yield {
       val corpus = df.filter(col(p.id) < deltaFrom)
       val delta = df.filter(col(p.id) >= deltaFrom)
       val (card, existingCopies) = withOpSweep {
@@ -1137,7 +805,7 @@ final class HttpFacade(
             .collect()(0).getLong(0))
       }
       val fields = card.schema.fieldNames.zipWithIndex
-      sendJson(ex, 200, Json.obj(Seq[(String, Any)](
+      Json.obj(Seq[(String, Any)](
         "table" -> tablePath,
         "text" -> p.text,
         "id" -> p.id,
@@ -1145,7 +813,7 @@ final class HttpFacade(
         "length" -> p.length,
         "delta_from" -> deltaFrom,
         "budget" -> p.budget,
-        "existing" -> qp.get("existing").filter(_.nonEmpty).orNull,
+        "existing" -> existingPath.orNull,
         // null when the state came from a stored table — no recompute
         // happened, so no budget parameterized it
         "existing_budget" ->
@@ -1157,11 +825,8 @@ final class HttpFacade(
         "min_quality" -> p.minQ,
         "langs" -> p.langs.mkString(","),
         "existing_copies" -> existingCopies) ++
-        fields.map { case (f, i) => f -> card.getLong(i) }: _*))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+        fields.map { case (f, i) => f -> card.getLong(i) }: _*)
+    })
   }
 
   /** Release-shard manifest over any catalog table
@@ -1175,61 +840,22 @@ final class HttpFacade(
     * to audit a shard without downloading it. The manifest is
     * total-weight/budget-sized, so the response carries a rollup
     * (n_shards, n_docs, w_total) plus the first `limit` shard rows in
-    * shard order (default 1000, cap 10000). Validation follows the
-    * data-card conventions. */
+    * shard order (default 1000, cap 10000). */
   private def shardManifestRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val weight = qp.get("weight").filter(_.nonEmpty)
-      if (idCol.isEmpty || weight.isEmpty) {
-        sendJson(ex, 400,
-          detail("id and weight parameters are required")); return
-      }
-      val budget = qp.get("budget").map(_.toLongOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("budget must be an integer")); return
-        case Some(Some(b)) => b
-        case None => sendJson(ex, 400,
-          detail("budget parameter is required")); return
-      }
-      if (budget < 1) {
-        sendJson(ex, 400, detail("budget must be >= 1")); return
-      }
-      val seed = qp.getOrElse("seed", "release")
-      val limit = qp.get("limit").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("limit must be an integer")); return
-        case Some(Some(l)) => l
-        case None => 1000
-      }
-      if (limit < 0 || limit > 10000) {
-        sendJson(ex, 400,
-          detail("limit must be between 0 and 10000")); return
-      }
-      val unknown = Seq(idCol.get, weight.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(weight.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.NumericType]) {
-        sendJson(ex, 400,
-          detail(s"Weight column ${weight.get} is not numeric")); return
-      }
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      withOpSweep {
-      val manifest = graft.ops.Sampling.shardManifest(df, idCol.get,
-        weight.get, seed, budget).persist()
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val q = params(ex)
+    val (idCol, weight) = (q("id"), q("weight"))
+    val seed = q.raw.getOrElse("seed", "release")
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("id", "weight")
+      budget <- q.long("budget", lo = 1)
+      limit <- q.int("limit", 1000, 0, 10000)
+      _ <- columns(df, idCol, weight)
+      _ <- numericColumn(df, weight, "Weight")
+    } yield withOpSweep {
+      val manifest = graft.ops.Sampling.shardManifest(df, idCol,
+        weight, seed, budget).persist()
       try {
         val tot = manifest.agg(count(lit(1)).as("n_shards"),
           sum(col("n_docs")).as("n_docs"),
@@ -1238,10 +864,10 @@ final class HttpFacade(
         // explicit sort — an unordered limit over the manifest join
         // output returns different shards run-to-run
         val rows = manifest.orderBy(col("shard")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
+        Json.obj(
           "table" -> tablePath,
-          "id" -> idCol.get,
-          "weight" -> weight.get,
+          "id" -> idCol,
+          "weight" -> weight,
           "budget" -> budget,
           "seed" -> seed,
           "n_shards" -> (if (tot.isNullAt(0)) 0L else tot.getLong(0)),
@@ -1258,13 +884,9 @@ final class HttpFacade(
             // client) would silently round it and break the documented
             // recompute-to-audit contract
             "etag" -> r.getLong(5).toString,
-            "fill_ppm" -> r.getLong(6))))))
+            "fill_ppm" -> r.getLong(6)))))
       } finally manifest.unpersist()
-      }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    })
   }
 
   /** Probe a batch table against a STORED dedup index
@@ -1292,83 +914,31 @@ final class HttpFacade(
     * eviction-tolerance argument).
     */
   private def dedupProbeRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, text and id parameters are required")); return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq("cid", "dig", "csh", "sig")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(textCol.get, idCol.get)
-        .filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val threshold = qp.get("threshold").map(_.toDoubleOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("threshold must be a number")); return
-        case Some(Some(t)) if t.isNaN || t <= 0.0 || t > 1.0 =>
-          sendJson(ex, 400, detail("threshold must be in (0, 1]")); return
-        case Some(Some(t)) => t
-        case None => 0.8
-      }
-      val numHashes = intParam(ex, qp, "num_hashes", 128, 1, 1024) match {
-        case None => return
-        case Some(v) => v
-      }
-      val bands = qp.get("bands").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("bands must be an integer")); return
-        case Some(Some(b)) if b < 1 || numHashes % b != 0 =>
-          sendJson(ex, 400, detail(
-            s"bands must be a positive divisor of num_hashes ($numHashes)"))
-          return
-        case Some(Some(b)) => b
-        case None => 32
-      }
-      val shingleLen = intParam(ex, qp, "shingle_len", 3, 1, 32) match {
-        case None => return
-        case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      import org.apache.spark.sql.functions.{col, count, lit, size, when}
+    import org.apache.spark.sql.functions.{col, count, lit, size, when}
+    val q = params(ex)
+    val (indexPath, textCol, idCol) = (q("index"), q("text"), q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("index", "text", "id")
+      index <- stored(indexPath, "index", Seq("cid", "dig", "csh", "sig"))
+      _ <- columns(df, textCol, idCol)
+      _ <- stringColumn(df, textCol)
+      threshold <- q.threshold("threshold", 0.8)
+      numHashes <- q.int("num_hashes", 128, 1, 1024)
+      bands <- q.int("bands", 32)
+      _ <- check(!q.raw.contains("bands") || bands >= 1 && numHashes % bands == 0,
+        s"bands must be a positive divisor of num_hashes ($numHashes)")
+      shingleLen <- q.int("shingle_len", 3, 1, 32)
+      limit <- q.int("limit", 1000, 0, 10000)
       // the stored signatures fix num_hashes at build time; a probe run
       // with a different value would slice mismatched-length arrays and
       // return silently-wrong fuzzy verdicts — a caller error, surfaced
       // as 400 off a one-row probe (never a full index scan)
-      val storedLen = index.select(size(col("sig")).as("n")).limit(1)
+      storedLen = index.select(size(col("sig")).as("n")).limit(1)
         .collect().headOption.map(_.getInt(0))
-      if (storedLen.exists(_ != numHashes)) {
-        sendJson(ex, 400, detail(s"num_hashes ($numHashes) does not " +
-          s"match the index's signature length (${storedLen.get})"))
-        return
-      }
+      _ <- check(storedLen.forall(_ == numHashes), s"num_hashes ($numHashes) " +
+        s"does not match the index's signature length (${storedLen.get})")
+    } yield {
       // one persist, two actions (rollup + capped page): without it the
       // band join and Jaccard verify would run twice per request. The
       // persist deliberately runs OUTSIDE the op lock (lineage kept —
@@ -1377,7 +947,7 @@ final class HttpFacade(
       // rare overlap, never a wrong result — the price of keeping the
       // probe fully concurrent with the build surface
       val decisions = graft.ops.Dedup.incrementalProbe(index, df,
-        textCol.get, idCol.get, shingleLen = shingleLen,
+        textCol, idCol, shingleLen = shingleLen,
         numHashes = numHashes, bands = bands,
         threshold = threshold).persist()
       try {
@@ -1390,11 +960,11 @@ final class HttpFacade(
         // ORDER — an unordered limit over a join output changes rows
         // run-to-run (shard-manifest's sorted-cap convention)
         val rows = decisions.orderBy(col("id")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
+        Json.obj(
           "table" -> tablePath,
-          "index" -> indexPath.get,
-          "text" -> textCol.get,
-          "id" -> idCol.get,
+          "index" -> indexPath,
+          "text" -> textCol,
+          "id" -> idCol,
           "threshold" -> threshold,
           "num_hashes" -> numHashes.toLong,
           "bands" -> bands.toLong,
@@ -1409,12 +979,9 @@ final class HttpFacade(
               (if (r.isNullAt(1)) null else String.valueOf(r.get(1))),
             "fuzzy_dup_of" ->
               (if (r.isNullAt(2)) null else String.valueOf(r.get(2))),
-            "is_new" -> r.getBoolean(3))))))
+            "is_new" -> r.getBoolean(3)))))
       } finally { decisions.unpersist(blocking = false); () }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    })
   }
 
   /** ANN search over a STORED IVF index
@@ -1434,88 +1001,39 @@ final class HttpFacade(
     * `limit` (default 1000, cap 10000). Read-only and persist-free —
     * one action, no op lock, fully concurrent with the build ops. */
   private def annSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val centPath = qp.get("centroids").filter(_.nonEmpty)
-      val vecCol = qp.get("vec").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || centPath.isEmpty || vecCol.isEmpty ||
-          idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, centroids, vec and id parameters are required")); return
-      }
-      val assign = loadStored(ex, indexPath.get, "index",
-        Seq("id", "vec", "cid")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val cent = loadStored(ex, centPath.get, "centroids",
-        Seq("cid", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(vecCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(vecCol.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-        sendJson(ex, 400,
-          detail(s"Vector column ${vecCol.get} is not an array column"))
-        return
-      }
+    val q = params(ex)
+    val (indexPath, centPath, vecCol, idCol) =
+      (q("index"), q("centroids"), q("vec"), q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("index", "centroids", "vec", "id")
+      assign <- stored(indexPath, "index", Seq("id", "vec", "cid"))
+      cent <- stored(centPath, "centroids", Seq("cid", "cvec"))
+      _ <- columns(df, vecCol, idCol)
+      _ <- arrayColumn(df, vecCol)
       // dimension agreement across all three vector sources, each a
       // one-row probe: a mismatched query would otherwise score the
       // common prefix of every corpus vector and return a 200 with
       // silently-wrong rankings (the num_hashes-vs-signature class of
       // caller error, same cheap-check remedy)
-      def dimOf(t: org.apache.spark.sql.DataFrame, c: String): Option[Int] = {
-        import org.apache.spark.sql.functions.{col, size}
-        t.select(size(col(c)).as("n")).filter(col("n").isNotNull)
-          .limit(1).collect().headOption.map(_.getInt(0))
-      }
-      val (qDim, cDim, iDim) =
-        (dimOf(df, vecCol.get), dimOf(cent, "cvec"), dimOf(assign, "vec"))
-      val mismatch = Seq(
-        (qDim, cDim, "query vectors and the centroids"),
-        (iDim, cDim, "the stored index and the centroids"))
-        .collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
-      if (mismatch.isDefined) {
-        val (x, y, w) = mismatch.get
-        sendJson(ex, 400, detail(
-          s"Vector dimension mismatch between $w ($x vs $y)"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val nprobe = intParam(ex, qp, "nprobe", 2, 1, 1024) match {
-        case None => return; case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return; case Some(v) => v
-      }
+      cDim = dimOf(cent, "cvec")
+      _ <- sameDims(
+        (dimOf(df, vecCol), cDim, "query vectors and the centroids"),
+        (dimOf(assign, "vec"), cDim, "the stored index and the centroids"))
+      k <- q.int("k", 10, 1, 1000)
+      nprobe <- q.int("nprobe", 2, 1, 1024)
+      limit <- q.int("limit", 1000, 0, 10000)
+    } yield {
       // one action: the operator's output is already (query_id, rk)-
       // ordered, so the capped page is deterministic without a persist
-      val rows = HttpFacade.annSearch(df, vecCol.get, idCol.get,
+      val rows = HttpFacade.annSearch(df, vecCol, idCol,
         assign, cent, k, nprobe).limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "index" -> indexPath.get,
-        "centroids" -> centPath.get,
-        "vec" -> vecCol.get,
-        "id" -> idCol.get,
+        "index" -> indexPath,
+        "centroids" -> centPath,
+        "vec" -> vecCol,
+        "id" -> idCol,
         "k" -> k.toLong,
         "nprobe" -> nprobe.toLong,
         "n_results" -> rows.length.toLong,
@@ -1523,11 +1041,8 @@ final class HttpFacade(
           "query_id" -> String.valueOf(r.get(0)),
           "rk" -> r.getInt(1).toLong,
           "id" -> String.valueOf(r.get(2)),
-          "sim" -> r.getDouble(3))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "sim" -> r.getDouble(3)))))
+    })
   }
 
   /** BM25 search over a STORED postings index
@@ -1545,67 +1060,30 @@ final class HttpFacade(
     * default 10). Read-only and persist-free (one action), outside the
     * op lock. */
   private def bm25SearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val postings = spark.table(tablePath)
-      val missing = Seq("t", "id", "tf", "dl")
-        .filterNot(postings.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400, detail(s"Table $tablePath is not a bm25Index " +
-          s"postings table (missing: ${missing.mkString(", ")})"))
-        return
-      }
-      val qp = queryParams(ex)
-      val statsPath = qp.get("stats").filter(_.nonEmpty)
-      val termsRaw = qp.get("terms").filter(_.nonEmpty)
-      if (statsPath.isEmpty || termsRaw.isEmpty) {
-        sendJson(ex, 400,
-          detail("stats and terms parameters are required")); return
-      }
-      val stats = loadStored(ex, statsPath.get, "stats",
-        Seq("n_docs", "total_tokens")) match {
-        case None => return
-        case Some(t) => t
-      }
-      // percent-decode: terms arrive URL-encoded; URI.getQuery already
-      // decoded them, so a plain split suffices (same as langs)
-      val terms = termsRaw.get.split(",").toSeq
-        .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
-      if (terms.isEmpty) {
-        sendJson(ex, 400, detail(
-          "terms must be a non-empty comma-separated list")); return
-      }
-      if (terms.length > 64) {
-        sendJson(ex, 400, detail(
-          "terms is capped at 64 — a serving query, not a batch join"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return
-        case Some(v) => v
-      }
+    val q = params(ex)
+    val statsPath = q("stats")
+    reply(ex)(for {
+      postings <- table(tablePath)
+      missing = Seq("t", "id", "tf", "dl").filterNot(postings.columns.contains)
+      _ <- check(missing.isEmpty, s"Table $tablePath is not a bm25Index " +
+        s"postings table (missing: ${missing.mkString(", ")})")
+      _ <- q.required("stats", "terms")
+      stats <- stored(statsPath, "stats", Seq("n_docs", "total_tokens"))
+      terms <- termsOf(q)
+      k <- q.int("k", 10, 1, 1000)
+    } yield {
       val rows = HttpFacade.bm25Search(postings, stats, terms, k).collect()
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "stats" -> statsPath.get,
+        "stats" -> statsPath,
         "terms" -> terms.mkString(","),
         "k" -> k.toLong,
         "n_results" -> rows.length.toLong,
         "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           "id" -> String.valueOf(r.get(0)),
           "n_terms_hit" -> r.getLong(1),
-          "score_scaled" -> r.getLong(2))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "score_scaled" -> r.getLong(2)))))
+    })
   }
 
   /** Contamination search over a STORED fingerprint index
@@ -1633,75 +1111,34 @@ final class HttpFacade(
     * without a persist. Read-only, one action, outside the op lock. */
   private def contaminationSearchRoute(ex: HttpExchange,
       tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, text and id parameters are required")); return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq("cid", "fp", "fpb")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val minShared = intParam(ex, qp, "min_shared", 2, 1, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      val buckets = intParam(ex, qp, "buckets", 64, 1, 65536) match {
-        case None => return; case Some(v) => v
-      }
-      val k = intParam(ex, qp, "k", 8, 1, 64) match {
-        case None => return; case Some(v) => v
-      }
-      val window = intParam(ex, qp, "window", 4, 1, 64) match {
-        case None => return; case Some(v) => v
-      }
-      val hashMode = qp.getOrElse("hash_mode", "xx")
-      if (!Seq("xx", "md5").contains(hashMode)) {
-        sendJson(ex, 400, detail("hash_mode must be xx or md5")); return
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return; case Some(v) => v
-      }
+    val q = params(ex)
+    val (indexPath, textCol, idCol) = (q("index"), q("text"), q("id"))
+    val hashMode = q.raw.getOrElse("hash_mode", "xx")
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("index", "text", "id")
+      index <- stored(indexPath, "index", Seq("cid", "fp", "fpb"))
+      _ <- columns(df, textCol, idCol)
+      _ <- stringColumn(df, textCol)
+      minShared <- q.int("min_shared", 2, 1, 10000)
+      buckets <- q.int("buckets", 64, 1, 65536)
+      k <- q.int("k", 8, 1, 64)
+      window <- q.int("window", 4, 1, 64)
+      _ <- check(Seq("xx", "md5").contains(hashMode),
+        "hash_mode must be xx or md5")
+      limit <- q.int("limit", 1000, 0, 10000)
       // the operator's bucket validation is a caller error here, not a
       // 500: the index was built with one modulus and the request named
       // another
-      val result = try {
-        HttpFacade.contaminationSearch(df, textCol.get, idCol.get,
-          index, k, window, minShared, hashMode, buckets)
-      } catch {
-        case e: IllegalArgumentException =>
-          sendJson(ex, 400, detail(e.getMessage)); return
-      }
+      result <- callerError(HttpFacade.contaminationSearch(df, textCol,
+        idCol, index, k, window, minShared, hashMode, buckets))
+    } yield {
       val rows = result.limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "index" -> indexPath.get,
-        "text" -> textCol.get,
-        "id" -> idCol.get,
+        "index" -> indexPath,
+        "text" -> textCol,
+        "id" -> idCol,
         "min_shared" -> minShared.toLong,
         "buckets" -> buckets.toLong,
         "k" -> k.toLong,
@@ -1711,11 +1148,8 @@ final class HttpFacade(
         "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           "id" -> String.valueOf(r.get(0)),
           "probe_id" -> String.valueOf(r.get(1)),
-          "n_shared" -> r.getInt(2).toLong)))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "n_shared" -> r.getInt(2).toLong))))
+    })
   }
 
   /** Perceptual media search over a STORED signature index
@@ -1738,119 +1172,62 @@ final class HttpFacade(
     * matches at the release threshold, id-ordered, capped at `limit`.
     * Read-only, outside the op lock. */
   private def mediaSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val metaPath = qp.get("meta").filter(_.nonEmpty)
-      if (indexPath.isEmpty || metaPath.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index and meta parameters are required")); return
-      }
-      val idCol = qp.getOrElse("id", "id")
-      val payloadCol = qp.getOrElse("payload", "payload")
-      val formatCol = qp.getOrElse("format", "format")
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
+    import org.apache.spark.sql.functions.{col, lit, struct}
+    val q = params(ex)
+    val (indexPath, metaPath) = (q("index"), q("meta"))
+    val idCol = q.raw.getOrElse("id", "id")
+    val payloadCol = q.raw.getOrElse("payload", "payload")
+    val formatCol = q.raw.getOrElse("format", "format")
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("index", "meta")
+      limit <- q.int("limit", 1000, 0, 10000)
       // a corpus-sized probe table must not ride the broadcast path
       // (the operator 9x-replicates and broadcasts the probe keys —
       // fine for an arriving batch, an OOM/8 GB-limit hazard for a
       // whole corpus); nothing restricts what table a caller points
       // here, so the route exposes the operator's own escape hatch
-      val broadcastProbe = qp.getOrElse("broadcast", "true") match {
-        case "true" => true
-        case "false" => false
-        case _ =>
-          sendJson(ex, 400, detail("broadcast must be true or false"))
-          return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq("id", "format", "hist", "nn", "c1", "c2", "sb")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val metaDf = loadStored(ex, metaPath.get, "meta",
-        Seq("bin1", "bin2", "threshold_ppm", "n_buckets")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val missing = Seq(idCol, payloadCol).filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = df.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column $idCol is not an integral column")); return
-      }
-      if (df.schema(payloadCol).dataType !=
-          org.apache.spark.sql.types.BinaryType) {
-        sendJson(ex, 400, detail(
-          s"Payload column $payloadCol is not a binary column")); return
-      }
+      broadcastProbe <- Map("true" -> true, "false" -> false)
+        .get(q.raw.getOrElse("broadcast", "true"))
+        .toRight(bad("broadcast must be true or false"))
+      index <- stored(indexPath, "index",
+        Seq("id", "format", "hist", "nn", "c1", "c2", "sb"))
+      metaDf <- stored(metaPath, "meta",
+        Seq("bin1", "bin2", "threshold_ppm", "n_buckets"))
+      _ <- columns(df, idCol, payloadCol)
+      _ <- integralColumn(df, idCol)
+      _ <- typedColumn(df, payloadCol, "Payload", "a binary column")(
+        _ == BinaryType)
       // format may be a dotted struct field — resolve through select
-      val probeMedia = try {
-        df.select(
-          org.apache.spark.sql.functions.col(idCol).cast("long").as("id"),
-          org.apache.spark.sql.functions.col(payloadCol).as("payload"),
-          org.apache.spark.sql.functions.struct(
-            org.apache.spark.sql.functions.col(formatCol).cast("string")
-              .as("format"),
-            org.apache.spark.sql.functions.lit(0).as("width"),
-            org.apache.spark.sql.functions.lit(0).as("height"),
-            org.apache.spark.sql.functions.lit(0L).as("n_bytes"))
-            .as("meta"))
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          sendJson(ex, 400,
-            detail(s"Unknown format column $formatCol: ${e.getMessage}"))
-          return
-      }
+      probeMedia <- try Right(df.select(
+          col(idCol).cast("long").as("id"),
+          col(payloadCol).as("payload"),
+          struct(col(formatCol).cast("string").as("format"),
+            lit(0).as("width"), lit(0).as("height"), lit(0L).as("n_bytes"))
+            .as("meta")))
+        catch {
+          case e: org.apache.spark.sql.AnalysisException =>
+            Left(bad(s"Unknown format column $formatCol: ${e.getMessage}"))
+        }
       // geometry drift is a caller error (wrong meta for this index),
       // not a 500
-      val result = try {
-        graft.ops.Multimodal.mediaSignatureProbe(index, metaDf,
-          probeMedia, broadcastProbe)
-      } catch {
-        case e: IllegalArgumentException =>
-          sendJson(ex, 400, detail(e.getMessage)); return
-      }
-      val rows = result
-        .orderBy(org.apache.spark.sql.functions.col("id"),
-          org.apache.spark.sql.functions.col("probe_id"))
+      result <- callerError(graft.ops.Multimodal.mediaSignatureProbe(index,
+        metaDf, probeMedia, broadcastProbe))
+    } yield {
+      val rows = result.orderBy(col("id"), col("probe_id"))
         .limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "index" -> indexPath.get,
-        "meta" -> metaPath.get,
+        "index" -> indexPath,
+        "meta" -> metaPath,
         "id" -> idCol,
         "payload" -> payloadCol,
         "format" -> formatCol,
         "n_results" -> rows.length.toLong,
         "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           "id" -> r.getAs[Number](0).longValue(),
-          "probe_id" -> r.getAs[Number](1).longValue())))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "probe_id" -> r.getAs[Number](1).longValue()))))
+    })
   }
 
   /** ANN search over a STORED compressed (IVF-PQ) index
@@ -1883,129 +1260,55 @@ final class HttpFacade(
     * can only narrow). Read-only and persist-free, outside the op
     * lock. */
   private def pqSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val centPath = qp.get("centroids").filter(_.nonEmpty)
-      val cbPath = qp.get("codebook").filter(_.nonEmpty)
-      val vecCol = qp.get("vec").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || centPath.isEmpty || cbPath.isEmpty ||
-          vecCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, centroids, codebook, vec and id parameters are " +
-            "required")); return
-      }
-      val codes = loadStored(ex, indexPath.get, "index",
-        Seq("id", "sub", "code", "cid")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val cent = loadStored(ex, centPath.get, "centroids",
-        Seq("cid", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val codebook = loadStored(ex, cbPath.get, "codebook",
-        Seq("code", "sub", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(vecCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(vecCol.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-        sendJson(ex, 400,
-          detail(s"Vector column ${vecCol.get} is not an array column"))
-        return
-      }
-      val m = intParam(ex, qp, "m", 4, 1, 4096) match {
-        case None => return; case Some(v) => v
-      }
-      val dim = intParam(ex, qp, "dim", 64, 1, 65536) match {
-        case None => return; case Some(v) => v
-      }
-      if (dim % m != 0) {
-        sendJson(ex, 400,
-          detail(s"dim=$dim must split into m=$m equal subspaces"))
-        return
-      }
+    val q = params(ex)
+    val (indexPath, centPath, cbPath, vecCol, idCol) =
+      (q("index"), q("centroids"), q("codebook"), q("vec"), q("id"))
+    val rawPath = q.opt("raw")
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("index", "centroids", "codebook", "vec", "id")
+      codes <- stored(indexPath, "index", Seq("id", "sub", "code", "cid"))
+      cent <- stored(centPath, "centroids", Seq("cid", "cvec"))
+      codebook <- stored(cbPath, "codebook", Seq("code", "sub", "cvec"))
+      _ <- columns(df, vecCol, idCol)
+      _ <- arrayColumn(df, vecCol)
+      m <- q.int("m", 4, 1, 4096)
+      dim <- q.int("dim", 64, 1, 65536)
+      _ <- check(dim % m == 0, s"dim=$dim must split into m=$m equal subspaces")
       // geometry agreement, each a one-row probe: query vectors must
       // carry `dim` coordinates (a shorter query would null-pad and be
       // dropped — an empty 200), centroid vectors must match the query
       // dim (coarse probing scores the common prefix otherwise), and
       // codebook subvectors must be dim/m wide (a mis-sliced ADC table
       // scores garbage with a 200)
-      def dimOf(t: org.apache.spark.sql.DataFrame, c: String): Option[Int] = {
-        import org.apache.spark.sql.functions.{col, size}
-        t.select(size(col(c)).as("n")).filter(col("n").isNotNull)
-          .limit(1).collect().headOption.map(_.getInt(0))
-      }
-      val (qDim, cDim, bDim) =
-        (dimOf(df, vecCol.get), dimOf(cent, "cvec"), dimOf(codebook, "cvec"))
-      val bad = Seq(
-        (qDim, Some(dim), "the query vectors and dim"),
-        (cDim, Some(dim), "the centroids and dim"),
-        (bDim, Some(dim / m), "the codebook subvectors and dim/m"))
-        .collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
-      if (bad.isDefined) {
-        val (x, y, w) = bad.get
-        sendJson(ex, 400, detail(
-          s"Vector dimension mismatch between $w ($x vs $y)"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val nprobe = intParam(ex, qp, "nprobe", 2, 1, 1024) match {
-        case None => return; case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      val rawPath = qp.get("raw").filter(_.nonEmpty)
-      val kCoarse = intParam(ex, qp, "k_coarse", 50, 1, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      val raw = rawPath match {
-        case None => None
-        case Some(p) => loadStored(ex, p, "raw", Seq("id", "vec", "cid")) match {
-          case None => return
-          case Some(t) => Some(t)
-        }
-      }
-      if (raw.isDefined && kCoarse < k) {
-        sendJson(ex, 400, detail(
-          s"k_coarse=$kCoarse must be >= k=$k — the refine stage can " +
-            "only narrow the candidate pool")); return
-      }
+      _ <- sameDims(
+        (dimOf(df, vecCol), Some(dim), "the query vectors and dim"),
+        (dimOf(cent, "cvec"), Some(dim), "the centroids and dim"),
+        (dimOf(codebook, "cvec"), Some(dim / m),
+          "the codebook subvectors and dim/m"))
+      k <- q.int("k", 10, 1, 1000)
+      nprobe <- q.int("nprobe", 2, 1, 1024)
+      limit <- q.int("limit", 1000, 0, 10000)
+      kCoarse <- q.int("k_coarse", 50, 1, 10000)
+      raw <- whenGiven(rawPath)(stored(_, "raw", Seq("id", "vec", "cid")))
+      _ <- check(raw.isEmpty || kCoarse >= k, s"k_coarse=$kCoarse must be " +
+        s">= k=$k — the refine stage can only narrow the candidate pool")
+    } yield {
       // one action: both operators' output is (query_id, rk)-ordered
       val valueField = if (raw.isDefined) "sim" else "dist"
       val rows = (raw match {
-        case Some(r) => HttpFacade.pqRerank(df, vecCol.get, idCol.get,
+        case Some(r) => HttpFacade.pqRerank(df, vecCol, idCol,
           codes, cent, codebook, r, m, dim, k, kCoarse, nprobe)
-        case None => HttpFacade.pqSearch(df, vecCol.get, idCol.get,
+        case None => HttpFacade.pqSearch(df, vecCol, idCol,
           codes, cent, codebook, m, dim, k, nprobe)
       }).limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "index" -> indexPath.get,
-        "centroids" -> centPath.get,
-        "codebook" -> cbPath.get,
-        "vec" -> vecCol.get,
-        "id" -> idCol.get,
+        "index" -> indexPath,
+        "centroids" -> centPath,
+        "codebook" -> cbPath,
+        "vec" -> vecCol,
+        "id" -> idCol,
         "m" -> m.toLong,
         "dim" -> dim.toLong,
         "k" -> k.toLong,
@@ -2017,11 +1320,8 @@ final class HttpFacade(
           "query_id" -> String.valueOf(r.get(0)),
           "rk" -> r.getInt(1).toLong,
           "id" -> r.getLong(2),
-          valueField -> r.getDouble(3))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          valueField -> r.getDouble(3)))))
+    })
   }
 
   /** Hybrid search over TWO stored indexes
@@ -2044,144 +1344,55 @@ final class HttpFacade(
     * Read-only and persist-free (one 1-row existence probe + one
     * action), outside the op lock. */
   private def hybridSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val postingsPath = qp.get("postings").filter(_.nonEmpty)
-      val statsPath = qp.get("stats").filter(_.nonEmpty)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val centPath = qp.get("centroids").filter(_.nonEmpty)
-      val vecCol = qp.get("vec").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val termsRaw = qp.get("terms").filter(_.nonEmpty)
-      val queryIdRaw = qp.get("query_id").filter(_.nonEmpty)
-      if (postingsPath.isEmpty || statsPath.isEmpty || indexPath.isEmpty ||
-          centPath.isEmpty || vecCol.isEmpty || idCol.isEmpty ||
-          termsRaw.isEmpty || queryIdRaw.isEmpty) {
-        sendJson(ex, 400, detail(
-          "postings, stats, index, centroids, terms, vec, id and " +
-            "query_id parameters are required")); return
-      }
-      val queryId = queryIdRaw.get.toLongOption match {
-        case None =>
-          sendJson(ex, 400, detail("query_id must be an integer")); return
-        case Some(v) => v
-      }
-      val postings = loadStored(ex, postingsPath.get, "postings",
-        Seq("t", "id", "tf", "dl")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val stats = loadStored(ex, statsPath.get, "stats",
-        Seq("n_docs", "total_tokens")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val assign = loadStored(ex, indexPath.get, "index",
-        Seq("id", "vec", "cid")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val cent = loadStored(ex, centPath.get, "centroids",
-        Seq("cid", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(vecCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(vecCol.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-        sendJson(ex, 400,
-          detail(s"Vector column ${vecCol.get} is not an array column"))
-        return
-      }
-      val terms = termsRaw.get.split(",").toSeq
-        .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
-      if (terms.isEmpty) {
-        sendJson(ex, 400, detail(
-          "terms must be a non-empty comma-separated list")); return
-      }
-      if (terms.length > 64) {
-        sendJson(ex, 400, detail(
-          "terms is capped at 64 — a serving query, not a batch join"))
-        return
-      }
+    import org.apache.spark.sql.functions.col
+    val q = params(ex)
+    val (postingsPath, statsPath, indexPath, centPath, vecCol, idCol) =
+      (q("postings"), q("stats"), q("index"), q("centroids"), q("vec"),
+        q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("postings", "stats", "index", "centroids", "terms",
+        "vec", "id", "query_id")
+      queryId <- q.long("query_id")
+      postings <- stored(postingsPath, "postings", Seq("t", "id", "tf", "dl"))
+      stats <- stored(statsPath, "stats", Seq("n_docs", "total_tokens"))
+      assign <- stored(indexPath, "index", Seq("id", "vec", "cid"))
+      cent <- stored(centPath, "centroids", Seq("cid", "cvec"))
+      _ <- columns(df, vecCol, idCol)
+      _ <- arrayColumn(df, vecCol)
+      terms <- termsOf(q)
       // dimension agreement (the ann-search device): a mismatched query
       // vector would null out of the cosine and silently degrade the
       // response to the lexical list alone with a 200 — worse here than
       // in ann-search, because a fused result LOOKS complete
-      def dimOf(t: org.apache.spark.sql.DataFrame, c: String): Option[Int] = {
-        import org.apache.spark.sql.functions.{col => c0, size}
-        t.select(size(c0(c)).as("n")).filter(c0("n").isNotNull)
-          .limit(1).collect().headOption.map(_.getInt(0))
-      }
-      val (qDim, cDim, iDim) =
-        (dimOf(df, vecCol.get), dimOf(cent, "cvec"), dimOf(assign, "vec"))
-      val mismatch = Seq(
-        (qDim, cDim, "query vectors and the centroids"),
-        (iDim, cDim, "the stored index and the centroids"))
-        .collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
-      if (mismatch.isDefined) {
-        val (x, y, w) = mismatch.get
-        sendJson(ex, 400, detail(
-          s"Vector dimension mismatch between $w ($x vs $y)"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val kBm25 = intParam(ex, qp, "k_bm25", 20, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val kDense = intParam(ex, qp, "k_dense", 20, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val nprobe = intParam(ex, qp, "nprobe", 2, 1, 1024) match {
-        case None => return; case Some(v) => v
-      }
-      val c = intParam(ex, qp, "c", 60, 0, 100000) match {
-        case None => return; case Some(v) => v
-      }
-      import org.apache.spark.sql.functions.col
-      val queries = df.filter(col(idCol.get) === queryId)
+      cDim = dimOf(cent, "cvec")
+      _ <- sameDims(
+        (dimOf(df, vecCol), cDim, "query vectors and the centroids"),
+        (dimOf(assign, "vec"), cDim, "the stored index and the centroids"))
+      k <- q.int("k", 10, 1, 1000)
+      kBm25 <- q.int("k_bm25", 20, 1, 1000)
+      kDense <- q.int("k_dense", 20, 1, 1000)
+      nprobe <- q.int("nprobe", 2, 1, 1024)
+      c <- q.int("c", 60, 0, 100000)
+      queries = df.filter(col(idCol) === queryId)
       // a missing query row would silently return the lexical list
       // alone with a 200 — the 1-row pushed-filter probe makes it a 404
-      if (queries.select(col(idCol.get)).limit(1).collect().isEmpty) {
-        sendJson(ex, 404, detail(
-          s"query_id $queryId not found in $tablePath")); return
-      }
+      _ <- check(queries.select(col(idCol)).limit(1).collect().nonEmpty,
+        s"query_id $queryId not found in $tablePath", 404)
       // the operators' integral-id requires are caller errors here (a
       // string-id postings or index table), not 500s
-      val fused = try {
-        HttpFacade.hybridSearch(queries, vecCol.get, idCol.get,
-          assign, cent, postings, stats, terms,
-          kBm25, kDense, nprobe, c, k)
-      } catch {
-        case e: IllegalArgumentException =>
-          sendJson(ex, 400, detail(e.getMessage)); return
-      }
+      fused <- callerError(HttpFacade.hybridSearch(queries, vecCol, idCol,
+        assign, cent, postings, stats, terms, kBm25, kDense, nprobe, c, k))
+    } yield {
       // one action: rrfFusion's output is (rrf desc, id)-ordered and
       // k-capped, so the page is deterministic without a persist
       val rows = fused.collect()
-      def optLong(r: org.apache.spark.sql.Row, i: Int): Any =
-        if (r.isNullAt(i)) null else r.getLong(i)
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "postings" -> postingsPath.get,
-        "stats" -> statsPath.get,
-        "index" -> indexPath.get,
-        "centroids" -> centPath.get,
+        "postings" -> postingsPath,
+        "stats" -> statsPath,
+        "index" -> indexPath,
+        "centroids" -> centPath,
         "terms" -> terms.mkString(","),
         "query_id" -> queryId,
         "k" -> k.toLong,
@@ -2195,11 +1406,8 @@ final class HttpFacade(
           "rank_bm25" -> optLong(r, 1),
           "rank_dense" -> optLong(r, 2),
           "n_lists" -> r.getLong(3),
-          "rrf_scaled" -> r.getLong(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "rrf_scaled" -> r.getLong(4)))))
+    })
   }
 
   /** Release-wide freshness audit
@@ -2216,70 +1424,35 @@ final class HttpFacade(
     * release dashboard, not a batch join. Read-only, |families| × two
     * pruned id columns, outside the op lock. */
   private def releaseAuditRoute(ex: HttpExchange): Unit = {
-    try {
-      val qp = queryParams(ex)
-      val famRaw = qp.get("families").filter(_.nonEmpty)
-      if (famRaw.isEmpty) {
-        sendJson(ex, 400, detail(
-          "families parameter is required " +
-            "(name:corpus.table:id_col:index.table:index_id_col;...)"))
-        return
+    val q = params(ex)
+    reply(ex)(for {
+      famRaw <- q.opt("families").toRight(bad("families parameter is " +
+        "required (name:corpus.table:id_col:index.table:index_id_col)"))
+      specs = famRaw.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
+      _ <- check(specs.nonEmpty && specs.length <= 16, "families must list " +
+        "1 to 16 specs — a release dashboard, not a batch join")
+      parsed = specs.map(_.split(":", -1).toSeq)
+      _ <- parsed.find(_.length != 5).map(spec => bad(s"Invalid family " +
+        s"spec '${spec.mkString(":")}' — expected " +
+        "name:corpus.table:id_col:index.table:index_id_col")).toLeft(())
+      names = parsed.map(_.head)
+      _ <- check(names.distinct.length == names.length,
+        "family names must be distinct")
+      families <- each(parsed) {
+        case Seq(name, corpusPath, idCol, indexPath, indexIdCol) =>
+          for {
+            corpus <- stored(corpusPath, s"family '$name' corpus", Seq(idCol))
+            index <- stored(indexPath, s"family '$name' index",
+              Seq(indexIdCol))
+            // the indexAudit contract surfaced per family: a non-integral
+            // id would cast to null and report a fresh index fully stale
+            _ <- integralColumn(corpus, idCol, s"Family '$name' id")
+            _ <- integralColumn(index, indexIdCol, s"Family '$name' index id")
+          } yield (name, corpus, idCol, index, indexIdCol)
       }
-      val specs = famRaw.get.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
-      if (specs.isEmpty || specs.length > 16) {
-        sendJson(ex, 400, detail(
-          "families must list 1 to 16 specs — a release dashboard, " +
-            "not a batch join")); return
-      }
-      val parsed = specs.map(_.split(":", -1).toSeq)
-      parsed.find(_.length != 5) match {
-        case Some(bad) =>
-          sendJson(ex, 400, detail(s"Invalid family spec " +
-            s"'${bad.mkString(":")}' — expected " +
-            "name:corpus.table:id_col:index.table:index_id_col"))
-          return
-        case None =>
-      }
-      val names = parsed.map(_.head)
-      if (names.distinct.length != names.length) {
-        sendJson(ex, 400, detail("family names must be distinct")); return
-      }
-      def integral(t: org.apache.spark.sql.DataFrame, c: String): Boolean =
-        t.schema(c).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-      val families = scala.collection.mutable.ArrayBuffer
-        .empty[(String, org.apache.spark.sql.DataFrame, String,
-          org.apache.spark.sql.DataFrame, String)]
-      for (Seq(name, corpusPath, idCol, indexPath, indexIdCol) <- parsed) {
-        val corpus = loadStored(ex, corpusPath, s"family '$name' corpus",
-          Seq(idCol)) match {
-          case None => return
-          case Some(t) => t
-        }
-        val index = loadStored(ex, indexPath, s"family '$name' index",
-          Seq(indexIdCol)) match {
-          case None => return
-          case Some(t) => t
-        }
-        // the indexAudit contract surfaced per family: a non-integral
-        // id would cast to null and report a fresh index fully stale
-        if (!integral(corpus, idCol)) {
-          sendJson(ex, 400, detail(s"Family '$name' id column $idCol " +
-            "is not an integral column")); return
-        }
-        if (!integral(index, indexIdCol)) {
-          sendJson(ex, 400, detail(s"Family '$name' index id column " +
-            s"$indexIdCol is not an integral column")); return
-        }
-        families += ((name, corpus, idCol, index, indexIdCol))
-      }
-      val rows = graft.ops.Profile.releaseAudit(families.toSeq).collect()
-      sendJson(ex, 200, Json.obj(
+    } yield {
+      val rows = graft.ops.Profile.releaseAudit(families).collect()
+      Json.obj(
         "n_families" -> rows.length.toLong,
         "families" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           "family" -> r.getString(0),
@@ -2288,11 +1461,8 @@ final class HttpFacade(
           "n_covered" -> r.getLong(3),
           "n_unindexed" -> r.getLong(4),
           "n_orphaned" -> r.getLong(5),
-          "fresh_ppm" -> r.getLong(6))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "fresh_ppm" -> r.getLong(6)))))
+    })
   }
 
   /** Stored-index freshness audit over any catalog table
@@ -2308,68 +1478,30 @@ final class HttpFacade(
     * a fresh index as fully stale; a 400 here, not a 500). Read-only,
     * one pruned id column per side, outside the op lock. */
   private def indexAuditRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val indexIdCol = qp.get("index_id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || idCol.isEmpty || indexIdCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, id and index_id parameters are required")); return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq(indexIdCol.get)) match {
-        case None => return
-        case Some(t) => t
-      }
-      if (!df.columns.contains(idCol.get)) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${idCol.get}")); return
-      }
-      def integral(t: org.apache.spark.sql.DataFrame, c: String): Boolean =
-        t.schema(c).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-      if (!integral(df, idCol.get)) {
-        sendJson(ex, 400,
-          detail(s"Id column ${idCol.get} is not an integral column"))
-        return
-      }
-      if (!integral(index, indexIdCol.get)) {
-        sendJson(ex, 400, detail(
-          s"Index id column ${indexIdCol.get} is not an integral column"))
-        return
-      }
-      val r = graft.ops.Profile.indexAudit(df, idCol.get,
-        index, indexIdCol.get).collect()(0)
-      sendJson(ex, 200, Json.obj(
+    val q = params(ex)
+    val (indexPath, idCol, indexIdCol) = (q("index"), q("id"), q("index_id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("index", "id", "index_id")
+      index <- stored(indexPath, "index", Seq(indexIdCol))
+      _ <- columns(df, idCol)
+      _ <- integralColumn(df, idCol)
+      _ <- integralColumn(index, indexIdCol, "Index id")
+    } yield {
+      val r = graft.ops.Profile.indexAudit(df, idCol,
+        index, indexIdCol).collect()(0)
+      Json.obj(
         "table" -> tablePath,
-        "index" -> indexPath.get,
-        "id" -> idCol.get,
-        "index_id" -> indexIdCol.get,
+        "index" -> indexPath,
+        "id" -> idCol,
+        "index_id" -> indexIdCol,
         "n_corpus" -> r.getLong(0),
         "n_indexed" -> r.getLong(1),
         "n_covered" -> r.getLong(2),
         "n_unindexed" -> r.getLong(3),
         "n_orphaned" -> r.getLong(4),
-        "fresh_ppm" -> r.getLong(5)))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+        "fresh_ppm" -> r.getLong(5))
+    })
   }
 
   /** Model-based scoring over any catalog table
@@ -2400,86 +1532,42 @@ final class HttpFacade(
     * Read-only, outside the op lock; the scoring plan broadcasts the
     * vocab-sized weights table onto the corpus's tokens. */
   private def classifyRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val countsPath = qp.get("counts").filter(_.nonEmpty)
-      val totalsPath = qp.get("totals").filter(_.nonEmpty)
-      if (countsPath.isEmpty || totalsPath.isEmpty) {
-        sendJson(ex, 400, detail(
-          "counts and totals parameters are required")); return
-      }
-      val textCol = qp.getOrElse("text", "text")
-      val idCol = qp.getOrElse("id", "doc_id")
-      val limit = intParam(ex, qp, "limit", 100, 1, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val countsStored = loadStored(ex, countsPath.get, "model counts",
-        Seq("t", "cp", "cn")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val totalsStored = loadStored(ex, totalsPath.get, "model totals",
-        Seq("dp", "dn")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val ledgerForm = totalsStored.columns.contains("batch_id")
-      val (counts, totals) =
+    val q = params(ex)
+    val (countsPath, totalsPath) = (q("counts"), q("totals"))
+    val textCol = q.raw.getOrElse("text", "text")
+    val idCol = q.raw.getOrElse("id", "doc_id")
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("counts", "totals")
+      limit <- q.int("limit", 100, 1, 10000)
+      countsStored <- stored(countsPath, "model counts", Seq("t", "cp", "cn"))
+      totalsStored <- stored(totalsPath, "model totals", Seq("dp", "dn"))
+      ledgerForm = totalsStored.columns.contains("batch_id")
+      model <-
         if (ledgerForm)
-          graft.ops.Classifier.nbModelFold(countsStored, totalsStored)
+          Right(graft.ops.Classifier.nbModelFold(countsStored, totalsStored))
         else {
           val missing = Seq("tp", "tn", "v")
             .filterNot(totalsStored.columns.contains)
-          if (missing.nonEmpty) {
-            sendJson(ex, 400, detail(s"Model totals table " +
-              s"${totalsPath.get} is neither a one-shot model (missing " +
-              s"columns: ${missing.mkString(", ")}) nor a batch-stamped " +
-              "ledger (no batch_id column)")); return
-          }
-          if (totalsStored.limit(2).count() > 1L) {
-            sendJson(ex, 400, detail(s"Model totals table " +
-              s"${totalsPath.get} has multiple rows but no batch_id " +
-              "column - ambiguous: a one-shot model totals is exactly " +
-              "one row; an appendable ledger must be batch-stamped"))
-            return
-          }
-          (countsStored, totalsStored)
+          for {
+            _ <- check(missing.isEmpty, s"Model totals table $totalsPath is " +
+              "neither a one-shot model (missing columns: " +
+              s"${missing.mkString(", ")}) nor a batch-stamped ledger (no " +
+              "batch_id column)")
+            _ <- check(totalsStored.limit(2).count() <= 1L, "Model totals " +
+              s"table $totalsPath has multiple rows but no batch_id column " +
+              "- ambiguous: a one-shot model totals is exactly one row; an " +
+              "appendable ledger must be batch-stamped")
+          } yield (countsStored, totalsStored)
         }
-      val missing = Seq(textCol, idCol).filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
+      _ <- columns(df, textCol, idCol)
       // same caller-error convention as box-search/bloom-check: a
       // non-integral id column is a 400, not a ClassCastException-500
       // out of the response builder's getAs[Number]
-      val idIntegral = df.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column $idCol is not an integral column")); return
-      }
-      val scored =
-        try graft.ops.Classifier.nbScore(df, textCol, idCol, counts, totals)
-        catch {
-          case e: IllegalArgumentException =>
-            sendJson(ex, 400, detail(e.getMessage)); return
-        }
+      _ <- integralColumn(df, idCol)
+      scored <- callerError(graft.ops.Classifier.nbScore(df, textCol, idCol,
+        model._1, model._2))
+    } yield {
       // nbScore already orders by id; limit() on the ordered plan keeps
       // the capped collect deterministic. Three actions read the plan
       // (rows, kept, total) - persist so the scoring join executes
@@ -2491,10 +1579,10 @@ final class HttpFacade(
             org.apache.spark.sql.functions.col("is_pos")).count(),
           scored.count())
       } finally { scored.unpersist(); () }
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "counts" -> countsPath.get,
-        "totals" -> totalsPath.get,
+        "counts" -> countsPath,
+        "totals" -> totalsPath,
         "model_form" -> (if (ledgerForm) "ledger" else "one_shot"),
         "n_docs" -> total,
         "n_pos" -> kept,
@@ -2504,11 +1592,8 @@ final class HttpFacade(
           "n_tokens" -> r.getLong(1),
           "margin_scaled" -> r.getLong(2),
           "prior_scaled" -> r.getLong(3),
-          "is_pos" -> r.getBoolean(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "is_pos" -> r.getBoolean(4)))))
+    })
   }
 
   /** Tokenizer serving over any catalog table
@@ -2537,122 +1622,55 @@ final class HttpFacade(
     * in id order (orderBy precedes the capped collect — the r10 rule)
     * plus the corpus-wide doc count. Read-only, outside the op lock. */
   private def tokenizeRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val mergesPath = qp.get("merges").filter(_.nonEmpty)
-      if (mergesPath.isEmpty) {
-        sendJson(ex, 400, detail("merges parameter is required")); return
-      }
-      val textCol = qp.getOrElse("text", "text")
-      val idCol = qp.getOrElse("id", "doc_id")
-      val limit = intParam(ex, qp, "limit", 100, 1, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val mergesStored = loadStored(ex, mergesPath.get, "merges",
-        Seq("rank", "lhs", "rhs")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val rankIntegral = mergesStored.schema("rank").dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!rankIntegral) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "rank column is not an integral column")); return
-      }
-      val nonString = Seq("lhs", "rhs").filter(c =>
-        mergesStored.schema(c).dataType !=
-          org.apache.spark.sql.types.StringType)
-      if (nonString.nonEmpty) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          s"columns are not strings: ${nonString.mkString(", ")}")); return
-      }
+    import org.apache.spark.sql.functions.col
+    val q = params(ex)
+    val mergesPath = q("merges")
+    val textCol = q.raw.getOrElse("text", "text")
+    val idCol = q.raw.getOrElse("id", "doc_id")
+    def broken(why: String): String = s"Merges table $mergesPath $why"
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("merges")
+      limit <- q.int("limit", 100, 1, 10000)
+      mergesStored <- stored(mergesPath, "merges", Seq("rank", "lhs", "rhs"))
+      _ <- check(isIntegral(mergesStored.schema("rank").dataType),
+        broken("rank column is not an integral column"))
+      nonString = Seq("lhs", "rhs")
+        .filter(c => mergesStored.schema(c).dataType != StringType)
+      _ <- check(nonString.isEmpty,
+        broken(s"columns are not strings: ${nonString.mkString(", ")}"))
       // limit(65) bounds the collect whatever the stored table holds;
       // 65 rows back means the table is over the trainer's cap
-      val mergeRows = mergesStored
-        .select(org.apache.spark.sql.functions.col("rank"),
-          org.apache.spark.sql.functions.col("lhs"),
-          org.apache.spark.sql.functions.col("rhs"))
-        .orderBy(org.apache.spark.sql.functions.col("rank"))
-        .limit(65).collect()
-      if (mergeRows.length > 64) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "holds more than 64 merges - not a bpeTrain artifact " +
-          "(the trainer's cap; the list is driver-held apply state)"))
-        return
-      }
-      if (mergeRows.isEmpty) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "is empty - the segmenter needs at least one merge (bpeTrain " +
-          "emits zero rows only on a degenerate corpus)")); return
-      }
-      if (mergeRows.exists(r => r.isNullAt(0))) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has a NULL rank")); return
-      }
-      val ranks = mergeRows.map(_.getAs[Number](0).longValue())
-      if (ranks.distinct.length != ranks.length) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has duplicate ranks - the apply order is ambiguous"))
-        return
-      }
-      if (mergeRows.exists(r => r.isNullAt(1) || r.isNullAt(2) ||
-          r.getString(1).isEmpty || r.getString(2).isEmpty)) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has a NULL or empty merge side")); return
-      }
-      if (mergeRows.exists(r =>
-          !(r.getString(1) + r.getString(2)).matches("[a-z0-9]+"))) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has a merge side outside [a-z0-9]+ - not over the " +
-          "segmenter's word alphabet (bpeTrain only ever learns " +
-          "lowercase alphanumeric sides)")); return
-      }
-      val merges = mergeRows.toSeq.map(r => (r.getString(1), r.getString(2)))
-      val missing = Seq(textCol, idCol).filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = df.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column $idCol is not an integral column")); return
-      }
-      if (df.schema(textCol).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400, detail(
-          s"Text column $textCol is not a string column")); return
-      }
+      mergeRows = mergesStored.select(col("rank"), col("lhs"), col("rhs"))
+        .orderBy(col("rank")).limit(65).collect()
+      _ <- check(mergeRows.length <= 64, broken("holds more than 64 merges " +
+        "- not a bpeTrain artifact (the trainer's cap; the list is " +
+        "driver-held apply state)"))
+      _ <- check(mergeRows.nonEmpty, broken("is empty - the segmenter needs " +
+        "at least one merge (bpeTrain emits zero rows only on a degenerate " +
+        "corpus)"))
+      _ <- check(!mergeRows.exists(_.isNullAt(0)), broken("has a NULL rank"))
+      ranks = mergeRows.map(_.getAs[Number](0).longValue())
+      _ <- check(ranks.distinct.length == ranks.length,
+        broken("has duplicate ranks - the apply order is ambiguous"))
+      _ <- check(!mergeRows.exists(r => r.isNullAt(1) || r.isNullAt(2) ||
+          r.getString(1).isEmpty || r.getString(2).isEmpty),
+        broken("has a NULL or empty merge side"))
+      _ <- check(mergeRows.forall(r =>
+          (r.getString(1) + r.getString(2)).matches("[a-z0-9]+")),
+        broken("has a merge side outside [a-z0-9]+ - not over the " +
+          "segmenter's word alphabet (bpeTrain only ever learns lowercase " +
+          "alphanumeric sides)"))
+      merges = mergeRows.toSeq.map(r => (r.getString(1), r.getString(2)))
+      _ <- columns(df, textCol, idCol)
+      _ <- integralColumn(df, idCol)
+      _ <- stringColumn(df, textCol)
       // the expression's own construction contract is the backstop for
       // any artifact defect the checks above don't name - a broken
       // stored table is a caller error, not a 500
-      val seg =
-        try graft.ops.TextAnalysis.bpeSegment(df, textCol, idCol, merges)
-        catch {
-          case e: IllegalArgumentException =>
-            sendJson(ex, 400, detail(e.getMessage)); return
-        }
+      seg <- callerError(
+        graft.ops.TextAnalysis.bpeSegment(df, textCol, idCol, merges))
+    } yield {
       // two actions read the plan (capped collect + count) - persist so
       // the segmentation pass executes once (the r11 constant-factor
       // class; plain persist with lineage kept, fine outside the lock)
@@ -2663,11 +1681,9 @@ final class HttpFacade(
       // a NULL text segments to NULL counts (the expression is
       // null-intolerant, the SQL convention) - render them as JSON
       // nulls rather than NPE-500ing the whole response
-      def optLong(r: org.apache.spark.sql.Row, i: Int): Any =
-        if (r.isNullAt(i)) null else r.getLong(i)
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "merges" -> mergesPath.get,
+        "merges" -> mergesPath,
         "n_merges" -> merges.length.toLong,
         "n_docs" -> total,
         "n_returned" -> rows.length.toLong,
@@ -2678,11 +1694,8 @@ final class HttpFacade(
           "n_chars" -> optLong(r, 2),
           "n_tokens" -> optLong(r, 3),
           "seg_prefix" -> (if (r.isNullAt(4)) null else r.getString(4)),
-          "tokens_per_char_ppm" -> optLong(r, 5))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "tokens_per_char_ppm" -> optLong(r, 5)))))
+    })
   }
 
   /** Two-dimensional box query over a STORED Z-order layout
@@ -2698,73 +1711,27 @@ final class HttpFacade(
     * the SQL surface's job; this route's value is the enumeration a
     * plain WHERE cannot plan. Read-only, outside the op lock. */
   private def boxSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val store = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val boundsPath = qp.get("bounds").filter(_.nonEmpty)
-      val colA = qp.get("col_a").filter(_.nonEmpty)
-      val colB = qp.get("col_b").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (boundsPath.isEmpty || colA.isEmpty || colB.isEmpty ||
-          idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "bounds, col_a, col_b and id parameters are required")); return
-      }
-      def longParam(name: String): Option[Long] =
-        qp.get(name).flatMap(_.toLongOption) match {
-          case None =>
-            sendJson(ex, 400,
-              detail(s"$name must be a long integer")); None
-          case some => some
-        }
-      val (loA, hiA, loB, hiB) = (longParam("lo_a"), longParam("hi_a"),
-        longParam("lo_b"), longParam("hi_b")) match {
-        case (Some(a), Some(b), Some(c), Some(d)) => (a, b, c, d)
-        case _ => return
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 1, 100000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val bounds = loadStored(ex, boundsPath.get, "bounds",
-        Seq("min_a", "max_a", "min_b", "max_b", "bits",
-          "n_buckets")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val missing = Seq(colA.get, colB.get, idCol.get)
-        .filterNot(store.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = store.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column ${idCol.get} is not an integral column")); return
-      }
-      val matched =
-        try graft.ops.Layout.boxProbeTables(store, bounds,
-          colA.get, colB.get, loA, hiA, loB, hiB)
-        catch {
-          case e: IllegalArgumentException =>
-            sendJson(ex, 400, detail(e.getMessage)); return
-        }
-      val c = org.apache.spark.sql.functions.col(idCol.get)
+    val q = params(ex)
+    val (boundsPath, colA, colB, idCol) =
+      (q("bounds"), q("col_a"), q("col_b"), q("id"))
+    def corner(name: String): Read[Long] =
+      q.parsed(name, s"$name must be a long integer")(_.toLongOption)
+    reply(ex)(for {
+      store <- table(tablePath)
+      _ <- q.required("bounds", "col_a", "col_b", "id")
+      loA <- corner("lo_a")
+      hiA <- corner("hi_a")
+      loB <- corner("lo_b")
+      hiB <- corner("hi_b")
+      limit <- q.int("limit", 1000, 1, 100000)
+      bounds <- stored(boundsPath, "bounds",
+        Seq("min_a", "max_a", "min_b", "max_b", "bits", "n_buckets"))
+      _ <- columns(store, colA, colB, idCol)
+      _ <- integralColumn(store, idCol)
+      matched <- callerError(graft.ops.Layout.boxProbeTables(store, bounds,
+        colA, colB, loA, hiA, loB, hiB))
+    } yield {
+      val c = org.apache.spark.sql.functions.col(idCol)
       // two actions (count, capped ids) - persist so the pruned scan
       // and residual filter run once
       matched.persist()
@@ -2773,16 +1740,13 @@ final class HttpFacade(
           matched.select(c).orderBy(c).limit(limit)
             .collect().map(_.getAs[Number](0).longValue()))
       } finally { matched.unpersist(); () }
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "bounds" -> boundsPath.get,
+        "bounds" -> boundsPath,
         "n_matched" -> n,
         "n_returned" -> ids.length.toLong,
-        "ids" -> ids.toSeq.map(v => Json.Raw(v.toString))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+        "ids" -> ids.toSeq.map(v => Json.Raw(v.toString)))
+    })
   }
 
   /** Cardinality from a STORED sketch (`?sketch=<ns.table>[&k=256]`):
@@ -2799,49 +1763,28 @@ final class HttpFacade(
     * Both columns must be integral (a string hash column would compare
     * lexicographically and silently corrupt the k-minimum merge). */
   private def distinctSketchRoute(ex: HttpExchange): Unit = {
-    val qp = queryParams(ex)
-    val sketchPath = qp.get("sketch").filter(_.nonEmpty)
-    if (sketchPath.isEmpty) {
-      sendJson(ex, 400, detail("sketch parameter is required")); return
-    }
-    val k = intParam(ex, qp, "k", 256, 2, 1 << 20) match {
-      case None => return
-      case Some(v) => v
-    }
-    try {
-      val sk = loadStored(ex, sketchPath.get, "sketch",
-        Seq("shard", "h")) match {
-        case None => return
-        case Some(t) => t
-      }
-      def integral(c: String): Boolean = sk.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      for (c <- Seq("shard", "h") if !integral(c)) {
-        sendJson(ex, 400,
-          detail(s"Sketch column $c is not an integral column")); return
-      }
+    val q = params(ex)
+    val sketchPath = q("sketch")
+    reply(ex)(for {
+      _ <- q.required("sketch")
+      k <- q.int("k", 256, 2, 1 << 20)
+      sk <- stored(sketchPath, "sketch", Seq("shard", "h"))
+      _ <- each(Seq("shard", "h"))(integralColumn(sk, _, "Sketch"))
+    } yield {
       val est = graft.ops.Sketches.kmvEstimate(
         graft.ops.Sketches.kmvMerge(sk, k), k).collect()(0)
       val nShards = sk.agg(
         org.apache.spark.sql.functions.count_distinct(
           org.apache.spark.sql.functions.col("shard")))
         .collect()(0).getLong(0)
-      sendJson(ex, 200, Json.obj(
-        "sketch" -> sketchPath.get,
+      Json.obj(
+        "sketch" -> sketchPath,
         "k" -> k.toLong,
         "n_shards" -> nShards,
         "n_hashes" -> est.getLong(1),
         "kth_min" -> (if (est.isNullAt(2)) 0L else est.getLong(2)),
-        "est" -> est.getLong(3)))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+        "est" -> est.getLong(3))
+    })
   }
 
   /** Membership check against a STORED Bloom filter
@@ -2858,70 +1801,26 @@ final class HttpFacade(
     * a mismatch silently yields false negatives — the one thing a
     * Bloom filter must never do — so the route refuses to default it). */
   private def bloomCheckRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val filterPath = qp.get("filter").filter(_.nonEmpty)
-      val valueCol = qp.get("value").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (filterPath.isEmpty || valueCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "filter, value and id parameters are required")); return
-      }
-      if (!qp.contains("n_words")) {
-        sendJson(ex, 400, detail("n_words is required (the filter's " +
-          "build geometry - a defaulted mismatch would silently yield " +
-          "false negatives)")); return
-      }
-      val nWords = intParam(ex, qp, "n_words", 0, 1, 1 << 28) match {
-        case None => return
-        case Some(v) => v
-      }
-      val k = intParam(ex, qp, "k", 4, 1, 64) match {
-        case None => return
-        case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 1, 100000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val filt = loadStored(ex, filterPath.get, "filter",
-        Seq("w", "bits")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val missing = Seq(valueCol.get, idCol.get)
-        .filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = df.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column ${idCol.get} is not an integral column")); return
-      }
-      val merged = graft.ops.Bloom.bloomMerge(
-        filt.select(org.apache.spark.sql.functions.col("w"),
-          org.apache.spark.sql.functions.col("bits")))
-      val probed = graft.ops.Bloom.bloomProbe(merged, df,
-        valueCol.get, nWords, k)
-      val hitCol = org.apache.spark.sql.functions.col("bloom_hit")
-      val idC = org.apache.spark.sql.functions.col(idCol.get)
+    import org.apache.spark.sql.functions.col
+    val q = params(ex)
+    val (filterPath, valueCol, idCol) = (q("filter"), q("value"), q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("filter", "value", "id")
+      _ <- check(q.raw.contains("n_words"), "n_words is required (the " +
+        "filter's build geometry - a defaulted mismatch would silently " +
+        "yield false negatives)")
+      nWords <- q.int("n_words", 0, 1, 1 << 28)
+      k <- q.int("k", 4, 1, 64)
+      limit <- q.int("limit", 1000, 1, 100000)
+      filt <- stored(filterPath, "filter", Seq("w", "bits"))
+      _ <- columns(df, valueCol, idCol)
+      _ <- integralColumn(df, idCol)
+    } yield {
+      val merged = graft.ops.Bloom.bloomMerge(filt.select(col("w"), col("bits")))
+      val probed = graft.ops.Bloom.bloomProbe(merged, df, valueCol, nWords, k)
+      val hitCol = col("bloom_hit")
+      val idC = col(idCol)
       // three actions (total, hits, capped misses) - persist so the
       // k-position explode + broadcast join run once
       probed.persist()
@@ -2930,18 +1829,15 @@ final class HttpFacade(
           probed.filter(!hitCol).select(idC).orderBy(idC)
             .limit(limit).collect().map(_.getAs[Number](0).longValue()))
       } finally { probed.unpersist(); () }
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "filter" -> filterPath.get,
+        "filter" -> filterPath,
         "n_values" -> nTotal,
         "n_hits" -> nHits,
         "n_misses" -> (nTotal - nHits),
         "n_returned" -> missIds.length.toLong,
-        "miss_ids" -> missIds.toSeq.map(v => Json.Raw(v.toString))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+        "miss_ids" -> missIds.toSeq.map(v => Json.Raw(v.toString)))
+    })
   }
 
   /** Quantile estimates from a STORED histogram sketch
@@ -2955,60 +1851,34 @@ final class HttpFacade(
     * caller's release config beside the table name). Catalog-level
     * route, read-only, outside the op lock. */
   private def quantileSketchRoute(ex: HttpExchange): Unit = {
-    val qp = queryParams(ex)
-    val sketchPath = qp.get("sketch").filter(_.nonEmpty)
-    if (sketchPath.isEmpty) {
-      sendJson(ex, 400, detail("sketch parameter is required")); return
-    }
-    def longParam(name: String): Option[Long] =
-      qp.get(name).flatMap(_.toLongOption) match {
-        case None =>
-          sendJson(ex, 400,
-            detail(s"$name is required and must be a long integer")); None
-        case some => some
-      }
-    val (lo, hi) = (longParam("lo"), longParam("hi")) match {
-      case (Some(a), Some(b)) => (a, b)
-      case _ => return
-    }
-    val nBins = intParam(ex, qp, "n_bins", 64, 2, 1 << 20) match {
-      case None => return
-      case Some(v) => v
-    }
-    if (lo > hi) {
-      sendJson(ex, 400, detail(s"lo must be <= hi, got [$lo, $hi]"))
-      return
-    }
-    val qs = qp.getOrElse("q", "500000").split(",").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-    val qsPpm = qs.map(_.toLongOption)
-    if (qsPpm.isEmpty || qsPpm.exists(_.isEmpty) ||
-        qsPpm.flatten.exists(q => q < 1 || q > 1000000)) {
-      sendJson(ex, 400, detail(
-        "q must be comma-separated ppm ranks in [1, 1000000]")); return
-    }
-    try {
-      val sk = loadStored(ex, sketchPath.get, "sketch",
-        Seq("shard", "bin", "n")) match {
-        case None => return
-        case Some(t) => t
-      }
+    val q = params(ex)
+    val sketchPath = q("sketch")
+    def bound(name: String): Read[Long] = q.parsed(name,
+      s"$name is required and must be a long integer")(_.toLongOption)
+    reply(ex)(for {
+      _ <- q.required("sketch")
+      lo <- bound("lo")
+      hi <- bound("hi")
+      nBins <- q.int("n_bins", 64, 2, 1 << 20)
+      _ <- check(lo <= hi, s"lo must be <= hi, got [$lo, $hi]")
+      qsPpm <- q.list("q", Seq(500000L),
+        "q must be comma-separated ppm ranks in [1, 1000000]")(
+        _.toLongOption.filter(p => p >= 1 && p <= 1000000))
+      sk <- stored(sketchPath, "sketch", Seq("shard", "bin", "n"))
+    } yield {
       val rows = graft.ops.Sketches.histQuantiles(
-        graft.ops.Sketches.histMerge(sk), qsPpm.flatten, lo, hi, nBins)
+        graft.ops.Sketches.histMerge(sk), qsPpm, lo, hi, nBins)
         .collect()
-      sendJson(ex, 200, Json.obj(
-        "sketch" -> sketchPath.get,
+      Json.obj(
+        "sketch" -> sketchPath,
         "lo" -> lo, "hi" -> hi, "n_bins" -> nBins.toLong,
         "n_total" -> (if (rows.isEmpty) 0L else rows.head.getLong(4)),
         "quantiles" -> rows.toSeq.map(r => Json.Raw(Json.obj(
           "q_ppm" -> r.getInt(0).toLong,
           "rank" -> r.getLong(1),
           "bin" -> r.getInt(2).toLong,
-          "est_lo" -> r.getLong(3))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "est_lo" -> r.getLong(3)))))
+    })
   }
 
   /** LSH index-shape planner over any catalog table
@@ -3024,78 +1894,32 @@ final class HttpFacade(
     * d(num_hashes) rows (divisor-count-sized, <= 34 for any
     * num_hashes <= 1024), so the whole table ships in the response; the
     * corpus is priced ONCE (pickLsh reuses the collected surface rather
-    * than re-running the pair join). Validation follows the
-    * shard-manifest conventions. */
+    * than re-running the pair join). */
   private def lshPlanRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400,
-          detail("text and id parameters are required")); return
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val numHashes = qp.get("num_hashes").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("num_hashes must be an integer")); return
-        case Some(Some(n)) => n
-        case None => 128
-      }
-      if (numHashes < 1 || numHashes > 1024) {
-        sendJson(ex, 400,
-          detail("num_hashes must be between 1 and 1024")); return
-      }
-      val floor = qp.get("floor").map(_.toDoubleOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("floor must be a number")); return
-        case Some(Some(f)) if f.isNaN || f <= 0.0 || f > 1.0 =>
-          sendJson(ex, 400, detail("floor must be in (0, 1]")); return
-        case Some(Some(f)) => f
-        case None => 0.5
-      }
-      val targetMinPpm = qp.get("target_min_ppm").map(_.toLongOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("target_min_ppm must be an integer")); return
-        case Some(Some(t)) => t
-        case None => 950000L
-      }
-      if (targetMinPpm < 0 || targetMinPpm > 1000000L) {
-        sendJson(ex, 400,
-          detail("target_min_ppm must be between 0 and 1000000")); return
-      }
+    val q = params(ex)
+    val (textCol, idCol) = (q("text"), q("id"))
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("text", "id")
+      _ <- columns(df, textCol, idCol)
+      _ <- stringColumn(df, textCol)
+      numHashes <- q.int("num_hashes", 128, 1, 1024)
+      floor <- q.threshold("floor", 0.5)
+      targetMinPpm <- q.long("target_min_ppm", Some(950000L), 0, 1000000L)
+    } yield {
       // lshPlan localCheckpoints its verified-pair set — release it
       // under the op-sweep discipline (withOpSweep)
       val rows = withOpSweep {
-        graft.ops.Dedup.lshPlan(df, textCol.get, idCol.get,
+        graft.ops.Dedup.lshPlan(df, textCol, idCol,
           numHashes = numHashes, floorThreshold = floor).collect()
       }
       val (pb, pr) = graft.ops.Dedup.pickLsh(
         rows.toSeq.map(r => (r.getInt(0), r.getInt(1), r.getLong(3),
           r.getLong(6))), targetMinPpm)
-      sendJson(ex, 200, Json.obj(
+      Json.obj(
         "table" -> tablePath,
-        "text" -> textCol.get,
-        "id" -> idCol.get,
+        "text" -> textCol,
+        "id" -> idCol,
         "num_hashes" -> numHashes.toLong,
         "floor" -> floor,
         "target_min_ppm" -> targetMinPpm,
@@ -3108,11 +1932,8 @@ final class HttpFacade(
           "n_pairs" -> r.getLong(3),
           "exp_found_ppm" -> r.getLong(4),
           "mean_p_ppm" -> r.getLong(5),
-          "min_p_ppm" -> r.getLong(6))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+          "min_p_ppm" -> r.getLong(6)))))
+    })
   }
 
   /** Per-document realization of the mixture allocation
@@ -3128,118 +1949,67 @@ final class HttpFacade(
     * dataset to write, not a payload to serve. Same `maxLabels` bound on
     * domain cardinality as the mixture route. */
   private def epochPlanRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
+    import org.apache.spark.sql.functions.{col, count, expr, lit, min, sum}
+    val q = params(ex)
+    val (domain, idCol, weight) = (q("domain"), q("id"), q("weight"))
+    val maxLabels = 1000
+    reply(ex)(for {
+      df <- table(tablePath)
+      epochs <- q.int("epochs", 2)
+      limit <- q.int("limit", 100)
+      _ <- q.required("domain", "id", "weight")
+      budget <- budgetOf(q)
+      _ <- within("epochs", epochs, 1)
+      _ <- within("limit", limit, 0, 1000)
+      _ <- columns(df, domain, idCol, weight)
+      _ <- numericColumn(df, weight, "Weight")
+      _ <- groupableColumn(df, domain)
+      body <- withOpSweep {
+        val plan = graft.ops.Sampling.epochPlan(df, domain, idCol,
+          weight, expr(s"avail * $epochs"), budget).persist()
+        try {
+          // full_epochs = min(n_copies): the fractional prefix never covers
+          // a whole domain (frac < avail), so some doc always sits at the
+          // whole-epoch floor
+          val rollup = plan.groupBy(col("domain"))
+            .agg(count(lit(1)).as("n_docs"),
+              min(col("n_copies")).as("full_epochs"),
+              sum(col("n_copies")).as("total_copies"),
+              sum(col("n_copies") * col("w")).as("spent_weight"))
+            .orderBy(col("domain").asc_nulls_last)
+            .limit(maxLabels + 1).collect()
+          check(rollup.length <= maxLabels,
+            s"Column $domain has more than $maxLabels distinct " +
+              "values — epoch plans are for domain-like columns").map { _ =>
+            // the documented "first `limit` per-doc rows by id": an explicit
+            // sort makes the capped sample deterministic across identical
+            // requests (same convention as shard-manifest / dedup-probe)
+            val sample = plan.orderBy(col("id")).limit(limit).collect()
+            Json.obj(
+              "table" -> tablePath,
+              "domain" -> domain,
+              "id" -> idCol,
+              "weight" -> weight,
+              "budget" -> budget,
+              "epochs_cap" -> epochs.toLong,
+              "domains" -> rollup.toSeq.map(r => Json.Raw(Json.obj(
+                "domain" ->
+                  (if (r.isNullAt(0)) null else String.valueOf(r.get(0))),
+                "n_docs" -> r.getLong(1),
+                "full_epochs" -> r.getLong(2),
+                "n_extra" -> (r.getLong(3) - r.getLong(2) * r.getLong(1)),
+                "total_copies" -> r.getLong(3),
+                "spent_weight" -> r.getLong(4)))),
+              "sample" -> sample.toSeq.map(r => Json.Raw(Json.obj(
+                "id" -> String.valueOf(r.get(0)),
+                "domain" ->
+                  (if (r.isNullAt(1)) null else String.valueOf(r.get(1))),
+                "w" -> r.getLong(2),
+                "n_copies" -> r.getLong(3)))))
+          }
+        } finally plan.unpersist()
       }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val domain = qp.get("domain").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val weight = qp.get("weight").filter(_.nonEmpty)
-      val budget = qp.get("budget").flatMap(_.toLongOption)
-      val epochs = qp.get("epochs").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("epochs must be an integer")); return
-        case Some(Some(e)) => e
-        case None => 2
-      }
-      val limit = qp.get("limit").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("limit must be an integer")); return
-        case Some(Some(l)) => l
-        case None => 100
-      }
-      if (domain.isEmpty || idCol.isEmpty || weight.isEmpty) {
-        sendJson(ex, 400,
-          detail("domain, id and weight parameters are required")); return
-      }
-      if (budget.isEmpty || budget.exists(_ < 0)) {
-        sendJson(ex, 400,
-          detail("budget parameter is required and must be >= 0")); return
-      }
-      if (epochs < 1) {
-        sendJson(ex, 400, detail("epochs must be >= 1")); return
-      }
-      if (limit < 0 || limit > 1000) {
-        sendJson(ex, 400,
-          detail("limit must be between 0 and 1000")); return
-      }
-      val unknown = Seq(domain.get, idCol.get, weight.get)
-        .filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      val numeric = df.schema(weight.get).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      if (!numeric) {
-        sendJson(ex, 400,
-          detail(s"Weight column ${weight.get} is not numeric")); return
-      }
-      val groupable = df.schema(domain.get).dataType match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      }
-      if (!groupable) {
-        sendJson(ex, 400, detail(
-          s"Column ${domain.get} is not groupable (map type)")); return
-      }
-      import org.apache.spark.sql.functions.{col, count, expr, lit, min, sum}
-      val maxLabels = 1000
-      withOpSweep {
-      val plan = graft.ops.Sampling.epochPlan(df, domain.get, idCol.get,
-        weight.get, expr(s"avail * $epochs"), budget.get).persist()
-      try {
-        // full_epochs = min(n_copies): the fractional prefix never covers
-        // a whole domain (frac < avail), so some doc always sits at the
-        // whole-epoch floor
-        val rollup = plan.groupBy(col("domain"))
-          .agg(count(lit(1)).as("n_docs"),
-            min(col("n_copies")).as("full_epochs"),
-            sum(col("n_copies")).as("total_copies"),
-            sum(col("n_copies") * col("w")).as("spent_weight"))
-          .orderBy(col("domain").asc_nulls_last)
-          .limit(maxLabels + 1).collect()
-        if (rollup.length > maxLabels) {
-          sendJson(ex, 400, detail(
-            s"Column ${domain.get} has more than $maxLabels distinct " +
-              "values — epoch plans are for domain-like columns")); return
-        }
-        // the documented "first `limit` per-doc rows by id": an explicit
-        // sort makes the capped sample deterministic across identical
-        // requests (same convention as shard-manifest / dedup-probe)
-        val sample = plan.orderBy(col("id")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
-          "table" -> tablePath,
-          "domain" -> domain.get,
-          "id" -> idCol.get,
-          "weight" -> weight.get,
-          "budget" -> budget.get,
-          "epochs_cap" -> epochs.toLong,
-          "domains" -> rollup.toSeq.map(r => Json.Raw(Json.obj(
-            "domain" -> (if (r.isNullAt(0)) null else String.valueOf(r.get(0))),
-            "n_docs" -> r.getLong(1),
-            "full_epochs" -> r.getLong(2),
-            "n_extra" -> (r.getLong(3) - r.getLong(2) * r.getLong(1)),
-            "total_copies" -> r.getLong(3),
-            "spent_weight" -> r.getLong(4)))),
-          "sample" -> sample.toSeq.map(r => Json.Raw(Json.obj(
-            "id" -> String.valueOf(r.get(0)),
-            "domain" -> (if (r.isNullAt(1)) null else String.valueOf(r.get(1))),
-            "w" -> r.getLong(2),
-            "n_copies" -> r.getLong(3))))))
-      } finally plan.unpersist()
-      }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    } yield body)
   }
 
   /** Class-balance report of one column (`?column=` required): per-value
@@ -3249,56 +2019,32 @@ final class HttpFacade(
     * caller error surfaced as 400 when more than `maxLabels` (default
     * 1000) rows come back — balance reports are for label-like columns. */
   private def balanceRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val column = queryParams(ex).get("column").filter(_.nonEmpty)
-      if (column.isEmpty) {
-        sendJson(ex, 400, detail("column parameter is required")); return
-      }
-      if (!df.columns.contains(column.get)) {
-        sendJson(ex, 400, detail(s"Unknown column: ${column.get}")); return
-      }
+    val q = params(ex)
+    val column = q("column")
+    val maxLabels = 1000
+    reply(ex)(for {
+      df <- table(tablePath)
+      _ <- q.required("column")
+      _ <- check(df.columns.contains(column), s"Unknown column: $column")
       // same convention as profileRoute: an explicitly requested
       // non-groupable column (map/array/struct) is a caller error — 400,
       // not a raw AnalysisException surfaced as 500
-      val groupable = df.schema(column.get).dataType match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      }
-      if (!groupable) {
-        sendJson(ex, 400, detail(
-          s"Column ${column.get} is not groupable (map type)")); return
-      }
-      val maxLabels = 1000
-      val rows = graft.ops.Profile.classBalance(df, column.get)
+      _ <- groupableColumn(df, column)
+      rows = graft.ops.Profile.classBalance(df, column)
         .limit(maxLabels + 1).collect()
-      if (rows.length > maxLabels) {
-        sendJson(ex, 400, detail(
-          s"Column ${column.get} has more than $maxLabels distinct " +
-            "values — balance reports are for label-like columns")); return
-      }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "column" -> column.get,
-        "gini_ppm" -> (if (rows.isEmpty) null
-                       else java.lang.Long.valueOf(rows.head.getLong(3))),
-        "balance" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "label" -> (if (r.isNullAt(0)) null
-                      else String.valueOf(r.get(0))),
-          "n" -> r.getLong(1),
-          "share_ppm" -> r.getLong(2))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+      _ <- check(rows.length <= maxLabels,
+        s"Column $column has more than $maxLabels distinct " +
+          "values — balance reports are for label-like columns")
+    } yield Json.obj(
+      "table" -> tablePath,
+      "column" -> column,
+      "gini_ppm" -> (if (rows.isEmpty) null
+                     else java.lang.Long.valueOf(rows.head.getLong(3))),
+      "balance" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "label" -> (if (r.isNullAt(0)) null
+                    else String.valueOf(r.get(0))),
+        "n" -> r.getLong(1),
+        "share_ppm" -> r.getLong(2))))))
   }
 
   private def health(ex: HttpExchange): Unit = {
@@ -3333,56 +2079,244 @@ final class HttpFacade(
         "reason" -> Option(e.getMessage).getOrElse("Health check failed")))
     }
 
-  // ---------------------------------------------------------------- helpers
+  // ------------------------------------------------------------- validation
 
-  /** Parse + shape-validate a stored-artifact table reference — the
-    * check shared by every probe route (dedup-probe's index,
-    * ann-search's index/centroids, bm25-search's stats,
-    * incremental-build's existing=): dotted path (400), existence
-    * (404), required columns (400). Sends the error itself; None =
-    * rejected. `what` names the parameter in the messages. */
-  private def loadStored(ex: HttpExchange, path: String, what: String,
-      required: Seq[String]): Option[org.apache.spark.sql.DataFrame] = {
-    val p = path.split("\\.").toSeq
-    if (p.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid $what table path: $path"))
-      return None
+  /** Send a handler's outcome: `Right` is the 200 JSON body, `Left` is
+    * `{"detail": msg}` under its code. A NoSuchEntityException raised
+    * anywhere in `body` is a 404 — the catalog's own not-found. */
+  private def reply(ex: HttpExchange)(body: => Read[String]): Unit =
+    stream(ex)(body)(sendJson(ex, 200, _))
+
+  /** [[reply]] for the routes that write their own 200 body: `write`
+    * runs on what the readers yield. */
+  private def stream[A](ex: HttpExchange)(read: => Read[A])(
+      write: A => Unit): Unit =
+    (try read catch {
+      case e: graft.catalog.NoSuchEntityException =>
+        Left(Reject(404, e.getMessage))
+    }) match {
+      case Right(a) => write(a)
+      case Left(Reject(code, msg)) => sendJson(ex, code, detail(msg))
     }
-    if (!provider.tableExists(p.init, p.last)) {
-      sendJson(ex, 404, detail(s"${what.capitalize} table not " +
-        s"found: $path"))
-      return None
+
+  private def bad(msg: String): Reject = Reject(400, msg)
+
+  private def check(ok: Boolean, msg: => String, code: Int = 400): Read[Unit] =
+    if (ok) Right(()) else Left(Reject(code, msg))
+
+  /** `v` within [lo, hi]; the message names the bounds the caller set. */
+  private def within(name: String, v: Long, lo: Long,
+      hi: Long = Long.MaxValue): Read[Unit] =
+    check(v >= lo && v <= hi,
+      if (hi == Long.MaxValue) s"$name must be >= $lo"
+      else s"$name must be between $lo and $hi")
+
+  /** An operator's own argument check is the caller's error: 400. */
+  private def callerError[A](op: => A): Read[A] =
+    try Right(op)
+    catch { case e: IllegalArgumentException => Left(bad(e.getMessage)) }
+
+  /** A step of the gated SQL path: the gate's InvalidSqlError is a 400,
+    * any other failure a 500 with the message `internal` gives it. */
+  private def gated[A](op: => A)(internal: Exception => String): Read[A] =
+    try Right(op)
+    catch {
+      case e: InvalidSqlError => Left(bad(e.getMessage))
+      case e: Exception => Left(Reject(500, internal(e)))
     }
-    val t = spark.table(path)
-    val missing = required.filterNot(t.columns.contains)
-    if (missing.nonEmpty) {
-      sendJson(ex, 400, detail(s"${what.capitalize} table $path is " +
-        s"missing columns: ${missing.mkString(", ")}"))
-      return None
+
+  /** `f` over every element, stopping at the first rejection. */
+  private def each[A, B](xs: Seq[A])(f: A => Read[B]): Read[Seq[B]] =
+    xs.foldLeft[Read[Vector[B]]](Right(Vector.empty)) { (acc, x) =>
+      acc.flatMap(bs => f(x).map(bs :+ _))
     }
-    Some(t)
+
+  /** `f` over an optional value; absent reads as `None`. */
+  private def whenGiven[A, B](o: Option[A])(f: A => Read[B]): Read[Option[B]] =
+    o.fold[Read[Option[B]]](Right(None))(f(_).map(Some(_)))
+
+  /** The request body as a flat JSON object; anything else is a 400. */
+  private def jsonBody(ex: HttpExchange): Read[Map[String, Any]] =
+    try Right(Json.parseObject(readBody(ex)))
+    catch {
+      case _: IllegalArgumentException =>
+        Left(bad("Request body must be a flat JSON object"))
+    }
+
+  private def field(body: Map[String, Any], name: String): Option[String] =
+    body.get(name).collect { case s: String => s }
+
+  private def queryUuid(id: String): Read[UUID] =
+    parseUuid(id).toRight(bad(s"Invalid query ID format: $id"))
+
+  private def queryResult(id: String): Read[QueryResult] =
+    queryUuid(id).flatMap(uuid =>
+      executor.getStatus(uuid).toRight(Reject(404, s"Query not found: $id")))
+
+  /** A dotted `ns.table` path as its parts, else 400. */
+  private def tableRef(path: String, name: String = "table"): Read[Seq[String]] = {
+    val parts = path.split("\\.").toSeq
+    check(parts.length >= 2, s"Invalid $name path: $path").map(_ => parts)
   }
 
-  /** Bounded-integer query parameter with a default — the validation
-    * shared by the probe routes' k/nprobe/limit/shingle_len surface.
-    * Sends the 400 itself; None = rejected. */
-  private def intParam(ex: HttpExchange, qp: Map[String, String],
-      name: String, dflt: Int, lo: Int, hi: Int): Option[Int] =
-    qp.get(name).map(_.toIntOption) match {
-      case Some(None) =>
-        sendJson(ex, 400, detail(s"$name must be an integer")); None
-      case Some(Some(v)) if v < lo || v > hi =>
-        sendJson(ex, 400,
-          detail(s"$name must be between $lo and $hi")); None
-      case Some(Some(v)) => Some(v)
-      case None => Some(dflt)
+  /** The catalog table at `path`: dotted (400), existing (404). `what`
+    * names the parameter that points at a stored artifact in the
+    * messages; empty for the route's own `{tablePath}`. */
+  private def table(path: String, what: String = ""): Read[DataFrame] = {
+    val name = if (what.isEmpty) "table" else s"$what table"
+    for {
+      parts <- tableRef(path, name)
+      _ <- check(provider.tableExists(parts.init, parts.last),
+        s"${name.capitalize} not found: $path", 404)
+    } yield spark.table(path)
+  }
+
+  /** A stored-artifact table named by a parameter — the probe routes'
+    * index/centroids/stats/…: [[table]]'s checks, then its `required`
+    * columns (400). */
+  private def stored(path: String, what: String,
+      required: Seq[String]): Read[DataFrame] =
+    table(path, what).flatMap { t =>
+      val missing = required.filterNot(t.columns.contains)
+      check(missing.isEmpty, s"${what.capitalize} table $path is " +
+        s"missing columns: ${missing.mkString(", ")}").map(_ => t)
     }
 
-  private def withQueryId(ex: HttpExchange, id: String)(f: UUID => Unit): Unit =
-    parseUuid(id) match {
-      case Some(uuid) => f(uuid)
-      case None => sendJson(ex, 400, detail(s"Invalid query ID format: $id"))
+  /** Every named column exists in `df`. */
+  private def columns(df: DataFrame, cols: String*): Read[Unit] = {
+    val unknown = cols.filterNot(df.columns.contains)
+    check(unknown.isEmpty, s"Unknown columns: ${unknown.mkString(", ")}")
+  }
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Column `c` of `df` has a type `ok` accepts, else 400
+    * `<role> column <c> is not <kind>`. */
+  private def typedColumn(df: DataFrame, c: String, role: String,
+      kind: String)(ok: DataType => Boolean): Read[Unit] =
+    check(ok(df.schema(c).dataType), s"$role column $c is not $kind")
+
+  private def stringColumn(df: DataFrame, c: String): Read[Unit] =
+    typedColumn(df, c, "Text", "a string column")(_ == StringType)
+
+  private def integralColumn(df: DataFrame, c: String,
+      role: String = "Id"): Read[Unit] =
+    typedColumn(df, c, role, "an integral column")(isIntegral)
+
+  private def numericColumn(df: DataFrame, c: String, role: String): Read[Unit] =
+    typedColumn(df, c, role, "numeric")(_.isInstanceOf[NumericType])
+
+  private def arrayColumn(df: DataFrame, c: String): Read[Unit] =
+    typedColumn(df, c, "Vector", "an array column")(_.isInstanceOf[ArrayType])
+
+  private def groupableColumn(df: DataFrame, c: String): Read[Unit] =
+    check(!df.schema(c).dataType.isInstanceOf[MapType],
+      s"Column $c is not groupable (map type)")
+
+  /** Length of the first non-null array in column `c` — a one-row probe. */
+  private def dimOf(t: DataFrame, c: String): Option[Int] = {
+    import org.apache.spark.sql.functions.{col, size}
+    t.select(size(col(c)).as("n")).filter(col("n").isNotNull)
+      .limit(1).collect().headOption.map(_.getInt(0))
+  }
+
+  /** The first (found, expected, what) pair whose known dims differ is a
+    * 400 naming both. */
+  private def sameDims(pairs: (Option[Int], Option[Int], String)*): Read[Unit] =
+    pairs.collectFirst { case (Some(x), Some(y), w) if x != y =>
+      bad(s"Vector dimension mismatch between $w ($x vs $y)")
+    }.toLeft(())
+
+  /** The mixture/epoch-plan `budget`: required, a long, >= 0. */
+  private def budgetOf(q: Params): Read[Long] =
+    q.parsed("budget", "budget parameter is required and must be >= 0")(
+      _.toLongOption.filter(_ >= 0))
+
+  /** The BM25 query bag (lowercased like the t-series tokenizer), at most
+    * 64 terms — a serving query, not a batch join. */
+  private def termsOf(q: Params): Read[Seq[String]] = for {
+    terms <- q.list("terms", Nil, "terms must be a non-empty " +
+      "comma-separated list")(t => Some(t.toLowerCase(java.util.Locale.ROOT)))
+    _ <- check(terms.length <= 64,
+      "terms is capped at 64 — a serving query, not a batch join")
+  } yield terms
+
+  private def optLong(r: Row, i: Int): Any = if (r.isNullAt(i)) null else r.getLong(i)
+
+  /** A request's query string, read through typed readers. URI.getQuery
+    * has already percent-decoded every value. */
+  private final class Params(val raw: Map[String, String]) {
+
+    /** A value read after [[required]] passed ("" when absent). */
+    def apply(name: String): String = raw.getOrElse(name, "")
+
+    /** A present, non-empty value. */
+    def opt(name: String): Option[String] = raw.get(name).filter(_.nonEmpty)
+
+    /** Every name present and non-empty, else 400 `a, b and c parameters
+      * are required`. */
+    def required(names: String*): Read[Unit] =
+      check(names.forall(opt(_).isDefined),
+        if (names.length == 1) s"${names.head} parameter is required"
+        else s"${names.init.mkString(", ")} and ${names.last} parameters " +
+          "are required")
+
+    /** An integer parameter, `dflt` when absent, within [lo, hi]. */
+    def int(name: String, dflt: Int, lo: Long = Long.MinValue,
+        hi: Long = Long.MaxValue): Read[Int] =
+      number(name, Some(dflt))(_.toIntOption)
+        .flatMap(v => within(name, v, lo, hi).map(_ => v))
+
+    /** A long parameter, `dflt` when absent (required when `None`),
+      * within [lo, hi]. */
+    def long(name: String, dflt: Option[Long] = None, lo: Long = Long.MinValue,
+        hi: Long = Long.MaxValue): Read[Long] =
+      number(name, dflt)(_.toLongOption)
+        .flatMap(v => within(name, v, lo, hi).map(_ => v))
+
+    private def number[A](name: String, dflt: Option[A])(
+        parse: String => Option[A]): Read[A] = raw.get(name) match {
+      case Some(s) => parse(s).toRight(bad(s"$name must be an integer"))
+      case None => dflt.toRight(bad(s"$name parameter is required"))
     }
+
+    /** A parameter `parse` accepts; absent or refused is a 400 `msg`. */
+    def parsed[A](name: String, msg: String)(parse: String => Option[A]): Read[A] =
+      raw.get(name).flatMap(parse).toRight(bad(msg))
+
+    /** A similarity threshold in (0, 1], `dflt` when absent. */
+    def threshold(name: String, dflt: Double): Read[Double] = raw.get(name) match {
+      case None => Right(dflt)
+      case Some(s) => for {
+        t <- s.toDoubleOption.toRight(bad(s"$name must be a number"))
+        _ <- check(t > 0.0 && t <= 1.0, s"$name must be in (0, 1]")
+      } yield t
+    }
+
+    /** A comma-separated list, `dflt` when absent: items trimmed, empty
+      * items dropped, each read by `item`; an empty list or a refused
+      * item is a 400 `msg`. */
+    def list[A](name: String, dflt: Seq[A], msg: String)(
+        item: String => Option[A]): Read[Seq[A]] = raw.get(name) match {
+      case None => Right(dflt)
+      case Some(s) =>
+        val items = s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(item)
+        check(items.nonEmpty && items.forall(_.isDefined), msg)
+          .map(_ => items.flatten)
+    }
+  }
+
+  private def params(ex: HttpExchange): Params =
+    new Params(Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq
+      .flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => Some(k -> v)
+          case _ => None
+        }
+      }.toMap).getOrElse(Map.empty))
 
   private def parseUuid(id: String): Option[UUID] =
     try Some(UUID.fromString(id)) catch { case _: IllegalArgumentException => None }
@@ -3391,15 +2325,6 @@ final class HttpFacade(
 
   private def readBody(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), UTF_8)
-
-  private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq
-      .flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap).getOrElse(Map.empty)
 
   private def sendJson(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)
@@ -3412,6 +2337,17 @@ final class HttpFacade(
 }
 
 object HttpFacade {
+
+  /** A request the façade refuses: the status code and the `detail`
+    * message it answers with. */
+  final case class Reject(code: Int, msg: String)
+
+  private val poolThreads = new AtomicInteger()
+
+  /** Request-pool threads are named `graft-http-<n>`, so a stopped
+    * façade's leftovers can be told apart from any other thread. */
+  private def poolThread(r: Runnable): Thread =
+    new Thread(r, s"graft-http-${poolThreads.incrementAndGet()}")
 
   /** The ann-search route's dataflow, factored out so the spec can pin
     * the PLAN of the exact computation the route runs (collect + DPP on
@@ -3568,12 +2504,18 @@ private[api] object Json {
 
   /** Parse a FLAT JSON object: string, integer, boolean, and null values
     * only (all this façade's request bodies). Unknown/nested structures
-    * fail with IllegalArgumentException. */
+    * fail with IllegalArgumentException, and so does a body that ends
+    * inside a value. */
   def parseObject(s: String): Map[String, Any] = {
     val t = s.trim
     if (t.isEmpty) return Map.empty
     val p = new Parser(t)
-    val res = p.obj()
+    val res =
+      try p.obj()
+      catch {
+        case e: IndexOutOfBoundsException =>
+          throw new IllegalArgumentException("truncated JSON body", e)
+      }
     p.ws()
     require(p.eof, s"trailing content in JSON body")
     res
@@ -3588,9 +2530,9 @@ private[api] object Json {
     }
     def obj(): Map[String, Any] = {
       ws(); expect('{'); ws()
-      if (!eof && s.charAt(i) == '}') { i += 1; return Map.empty }
       val b = Map.newBuilder[String, Any]
-      var done = false
+      var done = !eof && s.charAt(i) == '}'
+      if (done) i += 1
       while (!done) {
         ws()
         val k = str()

@@ -79,6 +79,19 @@ class HttpFacadeSpec extends SparkSuite {
     assert(post("/api/v1/query/execute", """{}""").statusCode === 400)
     assert(get("/api/v1/query/not-a-uuid/status").statusCode === 400)
     assert(post("/api/v1/query/not-a-uuid/cancel", "").statusCode === 400)
+    // a body that is not a flat JSON object is the caller's error, not a
+    // 500 carrying the parser's message
+    for {
+      body <- Seq("not json", """{"sql":""",
+        """{"sql":"SELECT 1","timeout":1.5}""")
+      path <- Seq("/api/v1/query/execute", "/api/v1/export/csv",
+        "/api/v1/export/arrow")
+    } {
+      val r = post(path, body)
+      assert(r.statusCode === 400, s"$path $body: ${r.body}")
+      assert(fieldOf(r.body, "detail") ===
+        "Request body must be a flat JSON object")
+    }
   }
 
   test("unknown query id is a 404; bad page size a 400") {
@@ -205,6 +218,28 @@ class HttpFacadeSpec extends SparkSuite {
     assert(sc.statusCode === 200)
     assert(sc.body.contains("n_nationkey") && sc.body.contains("\"table\":\"nation\""))
     assert(get("/api/v1/catalog/tables/nodots/schema").statusCode === 400)
+    val unknown = get("/api/v1/catalog/namespaces/no_such_ns/tables")
+    assert(unknown.statusCode === 404, unknown.body)
+    assert(unknown.body.contains("Namespace not found"), unknown.body)
+  }
+
+  test("every table route checks its path, then the table, before any " +
+      "parameter") {
+    val routes = Seq("", "/schema", "/profile", "/balance", "/mixture",
+      "/epoch-plan", "/dedup-sweep", "/substring-dedup", "/data-card",
+      "/incremental-build", "/shard-manifest", "/lsh-plan", "/dedup-probe",
+      "/ann-search", "/bm25-search", "/contamination-search",
+      "/hybrid-search", "/pq-search", "/index-audit", "/classify",
+      "/tokenize", "/media-search", "/box-search", "/bloom-check")
+    assert(routes.size === 24)
+    routes.foreach { op =>
+      val bad = get(s"/api/v1/catalog/tables/nodot$op")
+      assert(bad.statusCode === 400, s"$op: ${bad.body}")
+      assert(fieldOf(bad.body, "detail") === "Invalid table path: nodot", op)
+      val gone = get(s"/api/v1/catalog/tables/httpapi.nope$op")
+      assert(gone.statusCode === 404, s"$op: ${gone.body}")
+      assert(gone.body.contains("httpapi.nope"), s"$op: ${gone.body}")
+    }
   }
 
   test("table profile: per-column stats, columns param, 400/404 edges") {
@@ -2235,6 +2270,29 @@ class HttpFacadeSpec extends SparkSuite {
       "filter=httpapi.documents")).statusCode === 400)
     assert(get("/api/v1/catalog/tables/httpapi.nope/bloom-check" + q)
       .statusCode === 404)
+  }
+
+  test("stop shuts the request pool down: no pool thread outlives it") {
+    import scala.jdk.CollectionConverters._
+    def poolThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-http-")).toSet
+    val before = poolThreads()
+    (1 to 3).foreach { _ =>
+      val f = new HttpFacade(spark, new QueryExecutor(spark),
+        new SparkCatalogProvider(spark))
+      val p = f.start(0)
+      val r = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$p/api/v1/catalog/namespaces")).GET
+        .build(), BodyHandlers.ofString())
+      assert(r.statusCode === 200, r.body)
+      assert((poolThreads() -- before).nonEmpty, "the request ran off-pool")
+      f.stop()
+    }
+    val deadline = System.nanoTime() + 10000000000L
+    while ((poolThreads() -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    val left = poolThreads() -- before
+    assert(left.isEmpty, left.map(_.getName))
   }
 
   test("health reports healthy on a live session") {
