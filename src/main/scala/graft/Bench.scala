@@ -37,8 +37,6 @@ import org.apache.spark.sql.SparkSession
  *  - default (driver gate): fork-per-chunk as above.
  *  - `SPARK_GRAFT_BENCH_ONLY=t01,t02` — in-process run of just that subset
  *    (diagnosis loop; equivalent to a single child).
- *  - `SPARK_GRAFT_BENCH_INPROC=1` — full inventory in one JVM (the
- *    round-4 behavior, kept for measuring the accumulation delta itself).
  *  - `--child <names>` argv — internal: child-JVM entry, prints
  *    `GRAFT_TIME <name> <median> <r1> <r2> <r3>` lines on stdout.
  *
@@ -245,7 +243,7 @@ object Bench {
 
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val inproc = only.isDefined || sys.env.contains("SPARK_GRAFT_BENCH_INPROC")
+    val inproc = only.isDefined
     val ordered = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 

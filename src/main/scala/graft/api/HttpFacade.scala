@@ -2434,11 +2434,13 @@ object HttpFacade {
       terms: Seq[String], kBm25: Int, kDense: Int, nprobe: Int,
       c: Int, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, row_number}
+    // bound: bm25Probe ends in limit(kBm25), so the window numbers at most
+    // kBm25 rows (the route caps k_bm25 at 1000). Its anchor `id` must be
+    // integral: rrfFusion below requires that of every list before any
+    // action runs.
     val bm = graft.ops.Retrieval.bm25Probe(postings, stats, terms, kBm25)
-      // k-row post-limit frame: the single-partition window is fine
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_scaled").desc, col("id"))))
+      .withColumn("rk", row_number().over(graft.ops.BoundedWindow.orderBy(
+        col("id"), col("score_scaled").desc, col("id"))))
     val dense = graft.ops.Similarity.ivfTopKPartitioned(
       assign, "vec", "id", "cid", queries, vecCol, idCol,
       cent, "cvec", "cid", k = kDense, nprobe = nprobe)

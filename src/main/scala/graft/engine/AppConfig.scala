@@ -10,6 +10,10 @@ final case class QueryConfig(
     defaultTimeout: Int = 300,   // seconds
     minTimeout: Int = 10,
     maxTimeout: Int = 3600) {
+  // the executor fetches maxRows + 1 rows to detect truncation
+  require(maxRows >= 0 && maxRows < Int.MaxValue,
+    s"max_rows must be in [0, ${Int.MaxValue}), got $maxRows")
+
   /** Timeout clamp — operator A3
     * (reference: src/iceberg_explorer/query/executor.py:142-154). */
   def clampTimeout(requested: Option[Int]): Int =

@@ -22,9 +22,16 @@ import org.apache.spark.sql.SparkSession
  *    (engine.py:139-164) because DuckDB connections aren't thread-safe.
  *    SparkSession IS thread-safe, so queries here run concurrently —
  *    the registry and metrics are lock-free concurrent structures.
- *  - results are buffered bounded: `toLocalIterator` + `maxRows` cap,
- *    never an unbounded collect (100 TB design rule). The reference's
- *    `max_rows` config was dead code; we enforce it (SURVEY §2.A note).
+ *  - results are buffered bounded by ONE Spark action,
+ *    `limit(maxRows + 1).collect()`, never an unbounded collect (100 TB
+ *    design rule). Each task returns at most `maxRows + 1` rows, the
+ *    driver merges them down to `maxRows + 1` (the extra row only
+ *    detects truncation), and `spark.driver.maxResultSize` fails an
+ *    oversized statement cleanly instead of exhausting driver memory.
+ *    An `ORDER BY` plans as `TakeOrderedAndProject`: no range-partition
+ *    sample job and no shuffle, so a small statement is one job. The
+ *    reference's `max_rows` config was dead code; we enforce it
+ *    (SURVEY §2.A note).
  */
 final class QueryExecutor(
     spark: SparkSession,
@@ -124,19 +131,10 @@ final class QueryExecutor(
                    else spark.sql(result.sql, params)
           val schema = df.schema
           if (!cancelled.get()) {
-            // bounded driver buffering: maxRows + 1 detects truncation
-            // without materializing the full result on the driver.
-            val it = df.toLocalIterator()
-            val buf = Vector.newBuilder[org.apache.spark.sql.Row]
-            var n = 0
-            var truncated = false
-            while (it.hasNext && !truncated && !cancelled.get()) {
-              val row = it.next()
-              if (n < config.maxRows) { buf += row; n += 1 }
-              else truncated = true
-            }
+            val rows = df.limit(config.maxRows + 1).collect()
             if (!cancelled.get())
-              result.setCompleted(buf.result(), schema, truncated)
+              result.setCompleted(rows.iterator.take(config.maxRows).toVector,
+                schema, truncated = rows.length > config.maxRows)
           }
         }
       } catch {

@@ -35,12 +35,12 @@ final class QueryCancelledError(msg: String) extends Exception(msg)
  * (reference: src/iceberg_explorer/query/models.py:52-111).
  *
  * Result rows are buffered on the driver like the reference buffers Arrow
- * batches — but bounded: the executor collects at most `maxRows` via
- * `toLocalIterator`, never an unbounded `collect()`. At 100 TB the result
- * surface (pagination/CSV/NDJSON) only ever pulls bounded pages, and
- * `truncated` records that a cap was hit (the reference's `query.max_rows`
- * config existed but was dead code — we enforce it and note the
- * divergence, SURVEY §2.A).
+ * batches — but bounded: the executor keeps at most `maxRows` rows of one
+ * row-capped action (see [[QueryExecutor]]), never an unbounded
+ * `collect()`. At 100 TB the result surface (pagination/CSV/NDJSON) only
+ * ever pulls bounded pages, and `truncated` records that a cap was hit
+ * (the reference's `query.max_rows` config existed but was dead code — we
+ * enforce it and note the divergence, SURVEY §2.A).
  */
 final class QueryResult(val sql: String, val queryId: UUID = UUID.randomUUID()) {
   @volatile private var _state: QueryState = QueryState.Pending

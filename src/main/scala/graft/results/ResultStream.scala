@@ -15,8 +15,9 @@ import ValueFormat._
  * All functions are lazy `Iterator[String]`/`Iterator[Array[Byte]]`
  * producers over an already-buffered (bounded, max_rows-capped)
  * QueryResult — the reference's semantics, with the 100 TB caveat that the
- * buffer upstream is produced by `toLocalIterator` under a row cap, never
- * an unbounded collect (SURVEY §7.5(3)).
+ * buffer upstream is produced by one row-capped action in
+ * [[graft.engine.QueryExecutor]], never an unbounded collect
+ * (SURVEY §7.5(3)).
  */
 object ResultStream {
 

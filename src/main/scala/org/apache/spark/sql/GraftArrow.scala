@@ -17,12 +17,13 @@ import org.apache.spark.sql.execution.arrow.ArrowBatchStreamWriter
  *
  * Why: the reference engine buffers query results as Arrow RecordBatches
  * (iceberg-explorer `query/executor.py:254-260`) and serves columnar
- * pages from them. Spark's row transport (`toLocalIterator`) remains the
- * serving default here, but the Arrow export path streams the SAME
- * columnar IPC format — batches are produced by executors straight from
- * Tungsten rows, roll through the driver one batch at a time, and the
- * result is a fully-formed Arrow IPC stream (schema message, record
- * batches, end-of-stream) any Arrow reader can consume.
+ * pages from them. Spark's row transport (`QueryExecutor`'s row-capped
+ * `collect`) remains the serving default here, but the Arrow export path
+ * streams the SAME columnar IPC format — batches are produced by
+ * executors straight from Tungsten rows, roll through the driver one
+ * batch at a time, and the result is a fully-formed Arrow IPC stream
+ * (schema message, record batches, end-of-stream) any Arrow reader can
+ * consume.
  */
 object GraftArrow {
 

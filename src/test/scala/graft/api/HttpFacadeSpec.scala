@@ -1359,6 +1359,21 @@ class HttpFacadeSpec extends SparkSuite {
     // zero corpus reads: both rank lists come from stored index files
     assert(!finalPlan.linesIterator.exists(l =>
       l.contains("FileScan parquet") && l.contains("documents")), plan)
+    // the BM25 rank window is BoundedWindow's keyed single group, never a
+    // bare unpartitioned window (whose WindowExec warns on every request)
+    def windows(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.window.WindowExec] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        windows(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        windows(q.plan)
+      case w: org.apache.spark.sql.execution.window.WindowExec =>
+        w +: w.children.flatMap(windows)
+      case other => other.children.flatMap(windows)
+    }
+    val rankWindows = windows(direct.queryExecution.executedPlan)
+    assert(rankWindows.nonEmpty, plan)
+    assert(rankWindows.forall(_.partitionSpec.nonEmpty), plan)
 
     val base = "/api/v1/catalog/tables/httpapi.hy_queries/hybrid-search"
     val q = "?postings=httpapi.hy_postings&stats=httpapi.hy_stats" +

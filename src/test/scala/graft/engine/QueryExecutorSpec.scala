@@ -14,6 +14,34 @@ class QueryExecutorSpec extends SparkSuite {
 
   private lazy val executor = new QueryExecutor(spark)
 
+  /** Jobs the status store has recorded under `group`. A sentinel job in
+    * the same group comes last: the store takes listener events in order,
+    * so once it has the sentinel it has every earlier job of the group. */
+  private def jobsOfGroup(group: String): Seq[Int] = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "job count sentinel", interruptOnCancel = false)
+    val sentinel =
+      try {
+        val f = sc.parallelize(Seq(1), 1).countAsync()
+        Await.result(f, 60.seconds)
+        f.jobIds.head
+      } finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30.seconds.toNanos
+    while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinel) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).toSeq
+    assert(jobs.contains(sentinel), s"sentinel job $sentinel never recorded")
+    jobs.filterNot(_ == sentinel)
+  }
+
+  /** Jobs one served statement runs: the executor tags them with the
+    * query id as job group. */
+  private def jobsOfStatement(sql: String): Seq[Int] = {
+    val r = executor.execute(sql)
+    assert(r.state == QueryState.Completed)
+    jobsOfGroup(r.queryId.toString)
+  }
+
   // --- QueryResult state machine ------------------------------------------
   test("initial state is pending") {
     val r = new QueryResult("SELECT 1")
@@ -126,6 +154,75 @@ class QueryExecutorSpec extends SparkSuite {
     assert(r.rows.length == 50 && r.truncated)
   }
 
+  test("max_rows cap keeps the first rows of an ordered result") {
+    val small = new QueryExecutor(spark, QueryConfig(maxRows = 50))
+    val r = small.execute("SELECT id FROM range(1000) ORDER BY id DESC")
+    assert(r.rows.map(_.getLong(0)) == (999L to 950L by -1L))
+    assert(r.truncated)
+  }
+
+  test("a result of exactly max_rows rows is not truncated") {
+    val small = new QueryExecutor(spark, QueryConfig(maxRows = 50))
+    val r = small.execute("SELECT * FROM range(50)")
+    assert(r.rows.length == 50 && !r.truncated)
+  }
+
+  test("max_rows leaves room for the row that detects truncation") {
+    intercept[IllegalArgumentException](QueryConfig(maxRows = Int.MaxValue))
+    intercept[IllegalArgumentException](QueryConfig(maxRows = -1))
+  }
+
+  test("a single-partition ORDER BY statement runs exactly one job") {
+    Tables.register(spark, sf)
+    val jobs = jobsOfStatement(
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_name")
+    assert(jobs.size == 1, s"jobs=$jobs")
+  }
+
+  test("a broadcast join statement runs exactly two jobs") {
+    Tables.register(spark, sf)
+    // the broadcast build side, then the result
+    val jobs = jobsOfStatement(
+      "SELECT n.n_name, r.r_name FROM nation n JOIN region r " +
+        "ON n.n_regionkey = r.r_regionkey ORDER BY n.n_name")
+    assert(jobs.size == 2, s"jobs=$jobs")
+  }
+
+  test("an ORDER BY statement plans as a top-k over the scan, " +
+      "with no range-partitioning exchange") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+      SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    Tables.register(spark, sf)
+    val sql = "SELECT r_regionkey, r_name FROM region ORDER BY r_name"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains("r_name")) seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val qe =
+      try {
+        executor.execute(sql)
+        seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      } finally spark.listenerManager.unregister(listener)
+    assert(qe != null, "the statement's action never reported its plan")
+    val root = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
+    assert(root.isInstanceOf[TakeOrderedAndProjectExec], root.treeString)
+    assert(nodes(root).exists(_.isInstanceOf[FileSourceScanExec]),
+      root.treeString)
+    assert(!nodes(root).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      root.treeString)
+  }
+
   test("get_status returns tracked query; cleanup removes it") {
     val r = executor.execute("SELECT 1 AS one")
     assert(executor.getStatus(r.queryId).contains(r))
@@ -219,21 +316,12 @@ class QueryExecutorSpec extends SparkSuite {
     val sc = spark.sparkContext
     val group = s"health-no-job-${UUID.randomUUID()}"
     sc.setJobGroup(group, "health check job count", interruptOnCancel = false)
-    val sentinel =
-      try {
-        (1 to 3).foreach { _ =>
-          assert(GraftEngine.healthCheck(spark)("status") == "healthy")
-        }
-        val f = sc.parallelize(Seq(1), 1).countAsync()
-        Await.result(f, 60.seconds)
-        f.jobIds.head
-      } finally sc.clearJobGroup()
-    // the status store takes listener events in order: once it has the
-    // sentinel, it has every job the group started before it
-    val deadline = System.nanoTime() + 30.seconds.toNanos
-    while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinel) &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-    assert(sc.statusTracker.getJobIdsForGroup(group).toSeq == Seq(sentinel))
+    try {
+      (1 to 3).foreach { _ =>
+        assert(GraftEngine.healthCheck(spark)("status") == "healthy")
+      }
+    } finally sc.clearJobGroup()
+    assert(jobsOfGroup(group).isEmpty)
   }
 
   test("health check degrades when the catalog is unreachable") {
