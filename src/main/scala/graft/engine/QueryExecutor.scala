@@ -1,9 +1,9 @@
 package graft.engine
 
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.ConcurrentHashMap
 
+import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
@@ -32,13 +32,29 @@ import org.apache.spark.sql.SparkSession
  *    sample job and no shuffle, so a small statement is one job. The
  *    reference's `max_rows` config was dead code; we enforce it
  *    (SURVEY §2.A note).
+ *
+ * One lifecycle serves both entry points: `launch` registers the result,
+ * marks it Running and starts its one `graft-query-*` worker; `finish`
+ * waits for the outcome and records it. `execute` is `finish(launch(…))`
+ * on the caller's thread, `executeAsync` runs `finish` on one daemon
+ * thread. The [[QueryResult]] holds the state machine. Three parties may
+ * move it out of Running, and the first terminal transition wins; the
+ * others are refused and change nothing:
+ *  - the worker, to Completed or Failed (the statement's own error);
+ *  - the deadline in `finish`, to Failed "Query timeout exceeded", which
+ *    then cancels the job group;
+ *  - [[cancel]], to Cancelled, which then cancels the job group.
+ * Completed and Cancelled results stay registered until [[cleanup]]: the
+ * caller holds their id. A Failed or timed-out synchronous `execute`
+ * reaches its caller only as a throw, so it is de-registered first; an
+ * async result stays registered whatever its outcome, since
+ * `executeAsync` has returned its id.
  */
 final class QueryExecutor(
     spark: SparkSession,
     config: QueryConfig = QueryConfig()) {
 
   private val activeQueries = new ConcurrentHashMap[UUID, QueryResult]()
-  private val cancelFlags = new ConcurrentHashMap[UUID, AtomicBoolean]()
 
   def validateTimeout(timeout: Option[Int]): Int = config.clampTimeout(timeout)
 
@@ -53,118 +69,9 @@ final class QueryExecutor(
     * post-gate, so parameter VALUES can never smuggle keywords past A1). */
   def execute(sql: String, timeout: Option[Int] = None,
               params: Seq[Any] = Seq.empty): QueryResult = {
-    SqlGate.validate(sql)
-    val timeoutSec = validateTimeout(timeout)
-
-    val result = new QueryResult(sql)
-    val boundParams = params.toArray
-    val cancelled = new AtomicBoolean(false)
-    activeQueries.put(result.queryId, result)
-    cancelFlags.put(result.queryId, cancelled)
-
-    Metrics.incrementActiveQueries()
-    try {
-      result.setRunning()
-      runWithTimeout(result, timeoutSec, cancelled, boundParams)
-      Metrics.recordQueryDuration(result.metrics.durationSeconds, result.state.value)
-      Metrics.recordQueryRows(result.metrics.rowsReturned)
-      emitSpan(result, timeoutSec, result.state.value, None)
-      result
-    } catch {
-      case e: QueryTimeoutError =>
-        Metrics.recordQueryDuration(timeoutSec.toDouble, "timeout")
-        emitSpan(result, timeoutSec, "timeout", Some("Query timeout")); throw e
-      case e: QueryCancelledError =>
-        Metrics.recordQueryDuration(result.metrics.durationSeconds, "cancelled")
-        emitSpan(result, timeoutSec, "cancelled", None); throw e
-      case NonFatal(e) =>
-        Metrics.recordQueryDuration(result.metrics.durationSeconds, "failed")
-        emitSpan(result, timeoutSec, "failed",
-          Some(Option(e.getMessage).getOrElse(e.toString))); throw e
-    } finally {
-      Metrics.decrementActiveQueries()
-      cancelFlags.remove(result.queryId)
-    }
-  }
-
-  /** Gate-validated DataFrame for columnar export: the same A1 gate and
-    * maxRows bound as [[execute]], but the result stays a logical plan so
-    * the Arrow transport can stream executor-produced IPC batches without
-    * a driver Row-buffer detour (the reference buffers Arrow
-    * RecordBatches the same way, executor.py:254-260). */
-  def dataFrameForExport(sql: String): org.apache.spark.sql.DataFrame = {
-    SqlGate.validate(sql)
-    spark.sql(sql).limit(config.maxRows)
-  }
-
-  /** One trace record per execution, with the reference span's attribute
-    * set and OK/ERROR status semantics (reference: executor.py:181-222 —
-    * timeout/failure are ERROR, cancellation is OK). */
-  private def emitSpan(result: QueryResult, timeoutSec: Int,
-                       status: String, error: Option[String]): Unit =
-    Metrics.recordSpan(QuerySpan(
-      name = "spark.query",
-      queryId = result.queryId.toString,
-      timeoutSeconds = timeoutSec,
-      status = status,
-      durationSeconds = Some(result.metrics.durationSeconds),
-      rowsReturned =
-        if (status == "completed") Some(result.metrics.rowsReturned) else None,
-      statusCode =
-        if (status == "failed" || status == "timeout") "ERROR" else "OK",
-      statusDescription = error))
-
-  private def runWithTimeout(
-      result: QueryResult, timeoutSec: Int, cancelled: AtomicBoolean,
-      params: Array[Any] = Array.empty): Unit = {
-    val done = new CountDownLatch(1)
-    val errorHolder = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val jobGroup = result.queryId.toString
-
-    val worker = new Thread(() => {
-      try {
-        if (!cancelled.get()) {
-          // job group tags every job this thread triggers; cancelJobGroup
-          // with interruptOnCancel kills the running tasks.
-          spark.sparkContext.setJobGroup(jobGroup, result.sql, interruptOnCancel = true)
-          val df = if (params.isEmpty) spark.sql(result.sql)
-                   else spark.sql(result.sql, params)
-          val schema = df.schema
-          if (!cancelled.get()) {
-            val rows = df.limit(config.maxRows + 1).collect()
-            if (!cancelled.get())
-              result.setCompleted(rows.iterator.take(config.maxRows).toVector,
-                schema, truncated = rows.length > config.maxRows)
-          }
-        }
-      } catch {
-        case NonFatal(e) => if (!cancelled.get()) errorHolder.set(e)
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        done.countDown()
-      }
-    }, s"graft-query-$jobGroup")
-    worker.setDaemon(true)
-    worker.start()
-
-    val completed = done.await(timeoutSec.toLong, TimeUnit.SECONDS)
-
-    if (!completed) {
-      cancelled.set(true)
-      // AndFutureJobs: also kills jobs the worker submits AFTER this call
-      // (cancel can land between planning and job submission).
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-      result.setFailed("Query timeout exceeded")
-      throw new QueryTimeoutError(s"Query exceeded ${timeoutSec}s timeout")
-    }
-    if (cancelled.get()) {
-      result.setCancelled()
-      throw new QueryCancelledError("Query was cancelled")
-    }
-    Option(errorHolder.get()).foreach { e =>
-      result.setFailed(e.getMessage)
-      throw e
-    }
+    val run = launch(sql, timeout, params)
+    try finish(run)
+    finally if (run.result.state == QueryState.Failed) cleanup(run.result.queryId)
   }
 
   /**
@@ -178,56 +85,113 @@ final class QueryExecutor(
    */
   def executeAsync(sql: String, timeout: Option[Int] = None,
                    params: Seq[Any] = Seq.empty): QueryResult = {
+    val run = launch(sql, timeout, params)
+    val waiter = new Thread(() =>
+      try finish(run) catch { case NonFatal(_) => () }, // outcome is on the result
+      s"graft-async-${run.result.queryId}")
+    waiter.setDaemon(true)
+    waiter.start()
+    run.result
+  }
+
+  /** Gate-validated DataFrame for columnar export: the same A1 gate and
+    * maxRows bound as [[execute]], but the result stays a logical plan so
+    * the Arrow transport can stream executor-produced IPC batches without
+    * a driver Row-buffer detour (the reference buffers Arrow
+    * RecordBatches the same way, executor.py:254-260). */
+  def dataFrameForExport(sql: String): org.apache.spark.sql.DataFrame = {
     SqlGate.validate(sql)
-    val timeoutSec = validateTimeout(timeout)
-    val result = new QueryResult(sql)
-    val cancelled = new AtomicBoolean(false)
+    spark.sql(sql).limit(config.maxRows)
+  }
+
+  /** A launched statement: its registered result, its clamped timeout, and
+    * the worker's own exception, kept so `finish` can rethrow it. */
+  private final class Run(val result: QueryResult, val timeoutSec: Int) {
+    @volatile var failure: Throwable = _
+  }
+
+  private def launch(sql: String, timeout: Option[Int], params: Seq[Any]): Run = {
+    SqlGate.validate(sql)
+    val run = new Run(new QueryResult(sql), validateTimeout(timeout))
+    val result = run.result
+    val jobGroup = result.queryId.toString
+    val boundParams = params.toArray
     activeQueries.put(result.queryId, result)
-    cancelFlags.put(result.queryId, cancelled)
+    result.setRunning()
     Metrics.incrementActiveQueries()
-    val runner = new Thread(() => {
+
+    val worker = new Thread(() => {
       try {
-        result.setRunning()
-        runWithTimeout(result, timeoutSec, cancelled, params.toArray)
-        Metrics.recordQueryDuration(result.metrics.durationSeconds, result.state.value)
-        Metrics.recordQueryRows(result.metrics.rowsReturned)
-        emitSpan(result, timeoutSec, result.state.value, None)
+        // job group tags every job this thread triggers; cancelJobGroup
+        // with interruptOnCancel kills the running tasks.
+        spark.sparkContext.setJobGroup(jobGroup, sql, interruptOnCancel = true)
+        val df = if (boundParams.isEmpty) spark.sql(sql) else spark.sql(sql, boundParams)
+        val rows = df.limit(config.maxRows + 1).collect()
+        result.setCompleted(rows.iterator.take(config.maxRows).toVector,
+          df.schema, truncated = rows.length > config.maxRows)
       } catch {
-        // outcome already recorded on the result; span mirrors it
-        case _: QueryTimeoutError =>
-          Metrics.recordQueryDuration(timeoutSec.toDouble, "timeout")
-          emitSpan(result, timeoutSec, "timeout", Some("Query timeout"))
-        case _: QueryCancelledError =>
-          Metrics.recordQueryDuration(result.metrics.durationSeconds, "cancelled")
-          emitSpan(result, timeoutSec, "cancelled", None)
-        case NonFatal(e) =>
-          Metrics.recordQueryDuration(result.metrics.durationSeconds, "failed")
-          emitSpan(result, timeoutSec, "failed",
-            Some(Option(e.getMessage).getOrElse(e.toString)))
-      } finally {
-        Metrics.decrementActiveQueries()
-        cancelFlags.remove(result.queryId)
-      }
-    }, s"graft-async-${result.queryId}")
-    runner.setDaemon(true)
-    runner.start()
-    result
+        // any throwable, fatal ones too: a worker that dies without a
+        // transition would leave its caller waiting out the whole timeout
+        case e: Throwable =>
+          run.failure = e
+          result.setFailed(Option(e.getMessage).getOrElse(e.toString))
+      } finally spark.sparkContext.clearJobGroup()
+    }, s"graft-query-$jobGroup")
+    worker.setDaemon(true)
+    worker.start()
+    run
+  }
+
+  /** Waits out the statement's timeout, records its outcome once — the
+    * duration histogram, the rows counter, one span with the reference's
+    * attribute set and OK/ERROR status semantics (executor.py:181-222:
+    * timeout and failure are ERROR, cancellation is OK) and the active
+    * gauge — and throws by outcome. */
+  private def finish(run: Run): QueryResult = {
+    val result = run.result
+    val timedOut = !result.await(run.timeoutSec.seconds) &&
+      result.setFailed("Query timeout exceeded")
+    // AndFutureJobs: also kills jobs the worker submits AFTER this call
+    // (the deadline can land between planning and job submission).
+    if (timedOut) spark.sparkContext.cancelJobGroupAndFutureJobs(result.queryId.toString)
+
+    val (status, error) =
+      if (timedOut) ("timeout", Some("Query timeout"))
+      else if (result.state == QueryState.Failed) ("failed", result.errorMessage)
+      else (result.state.value, None)
+    Metrics.recordQueryDuration(
+      if (timedOut) run.timeoutSec.toDouble else result.metrics.durationSeconds, status)
+    Metrics.recordQueryRows(result.metrics.rowsReturned)
+    Metrics.recordSpan(QuerySpan(
+      name = "spark.query",
+      queryId = result.queryId.toString,
+      timeoutSeconds = run.timeoutSec,
+      status = status,
+      durationSeconds = Some(result.metrics.durationSeconds),
+      rowsReturned =
+        if (status == "completed") Some(result.metrics.rowsReturned) else None,
+      statusCode = if (error.isDefined) "ERROR" else "OK",
+      statusDescription = error))
+    Metrics.decrementActiveQueries()
+
+    status match {
+      case "timeout" =>
+        throw new QueryTimeoutError(s"Query exceeded ${run.timeoutSec}s timeout")
+      case "cancelled" => throw new QueryCancelledError("Query was cancelled")
+      case "failed" => throw run.failure
+      case _ => result
+    }
   }
 
   /** Cancel a running query — idempotent; false if unknown or terminal
     * (reference: executor.py:294-324). */
   def cancel(queryId: UUID): Boolean = {
-    val result = activeQueries.get(queryId)
-    val flag = cancelFlags.get(queryId)
-    if (result == null || flag == null) return false
-    if (result.isTerminal) return false
-    flag.set(true)
+    val cancelled = Option(activeQueries.get(queryId)).exists(_.setCancelled())
     // AndFutureJobs closes the plan-time race: a job group cancel issued
     // while the query is still being planned would otherwise be a no-op
     // and the action would run to completion once submitted.
-    spark.sparkContext.cancelJobGroupAndFutureJobs(queryId.toString)
-    if (result.state == QueryState.Running) result.setCancelled()
-    true
+    if (cancelled) spark.sparkContext.cancelJobGroupAndFutureJobs(queryId.toString)
+    cancelled
   }
 
   /** Lifecycle lookup (reference: executor.py:326-335). */
@@ -242,8 +206,5 @@ final class QueryExecutor(
   }
 
   /** De-register and free buffered results (reference: executor.py:337-347). */
-  def cleanup(queryId: UUID): Unit = {
-    activeQueries.remove(queryId)
-    cancelFlags.remove(queryId)
-  }
+  def cleanup(queryId: UUID): Unit = activeQueries.remove(queryId)
 }

@@ -1,6 +1,9 @@
 package graft.engine
 
 import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.concurrent.duration.FiniteDuration
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
@@ -49,6 +52,7 @@ final class QueryResult(val sql: String, val queryId: UUID = UUID.randomUUID()) 
   @volatile private var _rows: IndexedSeq[Row] = Vector.empty
   @volatile private var _schema: Option[StructType] = None
   @volatile private var _truncated: Boolean = false
+  private val done = new CountDownLatch(1)
 
   def state: QueryState = _state
   def metrics: ExecutionMetrics = _metrics
@@ -57,34 +61,49 @@ final class QueryResult(val sql: String, val queryId: UUID = UUID.randomUUID()) 
   def schema: Option[StructType] = _schema
   def truncated: Boolean = _truncated
 
+  /** Starts the clock; a terminal result keeps its state and metrics. */
   def setRunning(): Unit = synchronized {
-    _state = QueryState.Running
-    _metrics = ExecutionMetrics(startTime = System.currentTimeMillis())
+    if (!isTerminal) {
+      _state = QueryState.Running
+      _metrics = ExecutionMetrics(startTime = System.currentTimeMillis())
+    }
   }
 
+  /** The terminal setters move a non-terminal result to its end state and
+    * return true; on a result that is already terminal they change nothing
+    * and return false, so the first terminal transition wins. */
   def setCompleted(rows: IndexedSeq[Row], schema: StructType,
-                   truncated: Boolean = false): Unit = synchronized {
-    _state = QueryState.Completed
-    _rows = rows
-    _schema = Some(schema)
-    _truncated = truncated
-    _metrics = _metrics.copy(
-      endTime = Some(System.currentTimeMillis()), rowsReturned = rows.length.toLong)
-  }
+                   truncated: Boolean = false): Boolean =
+    terminate(QueryState.Completed) {
+      _rows = rows
+      _schema = Some(schema)
+      _truncated = truncated
+      _metrics = _metrics.copy(rowsReturned = rows.length.toLong)
+    }
 
-  def setFailed(error: String): Unit = synchronized {
-    _state = QueryState.Failed
-    _error = Some(error)
-    _metrics = _metrics.copy(endTime = Some(System.currentTimeMillis()))
-  }
+  def setFailed(error: String): Boolean =
+    terminate(QueryState.Failed) { _error = Some(error) }
 
-  def setCancelled(): Unit = synchronized {
-    _state = QueryState.Cancelled
-    _metrics = _metrics.copy(endTime = Some(System.currentTimeMillis()))
+  def setCancelled(): Boolean = terminate(QueryState.Cancelled) {}
+
+  private def terminate(to: QueryState)(record: => Unit): Boolean = synchronized {
+    if (isTerminal) false
+    else {
+      record
+      _metrics = _metrics.copy(endTime = Some(System.currentTimeMillis()))
+      _state = to
+      done.countDown()
+      true
+    }
   }
 
   def isTerminal: Boolean = _state match {
     case QueryState.Completed | QueryState.Failed | QueryState.Cancelled => true
     case _ => false
   }
+
+  /** Blocks until the result is terminal or `timeout` passes; true when
+    * terminal. */
+  def await(timeout: FiniteDuration): Boolean =
+    done.await(timeout.toNanos, TimeUnit.NANOSECONDS)
 }

@@ -1,5 +1,7 @@
 package graft.results
 
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -101,47 +103,39 @@ object ResultStream {
   }
 
   /**
-   * A18 blocking wait-for-completion: poll a pending/running query every
-   * `pollMs` until terminal, up to `maxWaitSec` (reference: results and
+   * A18 blocking wait-for-completion: wait for a pending/running query to
+   * reach a terminal state, up to `maxWaitSec` (reference: results and
    * CSV endpoints poll at 100 ms up to 3600 s,
    * api/routes/query.py:122-136, api/routes/export.py:90-101).
    * Returns the terminal result, or None on wait timeout.
    */
   def awaitCompletion(status: () => Option[QueryResult],
-                      pollMs: Long = 100L,
-                      maxWaitSec: Int = 3600): Option[QueryResult] = {
-    val deadline = System.nanoTime() + maxWaitSec * 1000L * 1000L * 1000L
-    var current = status()
-    while (current.exists(!_.isTerminal)) {
-      if (System.nanoTime() > deadline) return None
-      Thread.sleep(pollMs)
-      current = status()
-    }
-    current
-  }
+                      maxWaitSec: Int = 3600): Option[QueryResult] =
+    status().filter(_.await(maxWaitSec.seconds))
 
   /** NDJSON stream that first waits for a running query like the
     * reference's results endpoint: terminal → stream; wait timeout →
     * single error line. */
   def ndjsonAwait(status: () => Option[QueryResult], queryId: String,
                   pageSize: Int = 100, offset: Int = 0,
-                  pollMs: Long = 100L, maxWaitSec: Int = 3600): Iterator[String] =
+                  maxWaitSec: Int = 3600): Iterator[String] =
     status() match {
-      case None => ndjson(None, queryId, pageSize, offset)
-      case Some(_) =>
-        awaitCompletion(status, pollMs, maxWaitSec) match {
-          case Some(r) => ndjson(Some(r), queryId, pageSize, offset)
-          case None => Iterator.single(
-            errorLine("Timeout waiting for query completion"))
-        }
+      case Some(r) if !r.await(maxWaitSec.seconds) =>
+        Iterator.single(errorLine("Timeout waiting for query completion"))
+      case result => ndjson(result, queryId, pageSize, offset)
     }
 
   /** CSV export for inline SQL — the reference's `POST /export/csv`
     * accepts sql XOR query_id (reference: export.py:153-228); this is the
-    * sql arm: validate+execute synchronously, then stream. */
+    * sql arm: validate+execute synchronously, then stream. The client never
+    * sees the query id, so the result is de-registered at once; the
+    * returned iterator keeps its rows. */
   def csvForSql(executor: graft.engine.QueryExecutor, sql: String,
-                maxSizeBytes: Long = 1073741824L): Iterator[Array[Byte]] =
-    csv(executor.execute(sql), maxSizeBytes)
+                maxSizeBytes: Long = 1073741824L): Iterator[Array[Byte]] = {
+    val r = executor.execute(sql)
+    executor.cleanup(r.queryId)
+    csv(r, maxSizeBytes)
+  }
 
   /**
    * Streaming CSV export with byte cap — header, per-row formatting via

@@ -50,6 +50,24 @@ class LifecycleE2ESpec extends SparkSuite {
     assert(lines.head.contains("\"status\":\"failed\""))
   }
 
+  test("async timeout: the deadline fails the query and its span reads timeout") {
+    val fast = new QueryExecutor(spark, QueryConfig(minTimeout = 1))
+    spark.udf.register("spec_sleep_udf", (x: Long) => { Thread.sleep(5); x })
+    val t0 = System.nanoTime()
+    val r = fast.executeAsync(
+      "SELECT sum(spec_sleep_udf(id)) FROM range(20000)", timeout = Some(1))
+    val terminal = ResultStream.awaitCompletion(
+      () => fast.getStatus(r.queryId), maxWaitSec = 30)
+    assert((System.nanoTime() - t0) / 1e9 < 30)
+    assert(terminal.exists(_.state === QueryState.Failed), terminal)
+    assert(terminal.flatMap(_.errorMessage).contains("Query timeout exceeded"))
+    // the waiter thread records the span just after the transition
+    def span = Metrics.recentSpans.find(_.queryId == r.queryId.toString)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (span.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(span.exists(s => s.status == "timeout" && s.statusCode == "ERROR"), span)
+  }
+
   test("gate rejects before any registration on the async path too") {
     intercept[InvalidSqlError] { executor.executeAsync("DROP TABLE orders") }
     assert(executor.activeQueryIds.isEmpty)

@@ -1,12 +1,19 @@
 package graft.engine
 
 import java.util.UUID
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.TimeUnit.SECONDS
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
 import graft.SparkSuite
 import graft.tables.Tables
+
+/** Holds the thread-budget statement's worker inside its UDF. */
+object ThreadBudgetGate {
+  @volatile var latch = new CountDownLatch(1)
+}
 
 /** Lifecycle/state-machine + real-engine integration tests
   * (reference: tests/test_executor.py:204-245, 341-383, 411-465). */
@@ -75,6 +82,49 @@ class QueryExecutorSpec extends SparkSuite {
     val r = new QueryResult("SELECT 1")
     r.setCancelled()
     assert(r.state == QueryState.Cancelled && r.isTerminal)
+  }
+
+  test("a terminal transition after another is refused") {
+    val r = new QueryResult("SELECT 1")
+    r.setRunning()
+    assert(r.setCancelled())
+    val df = spark.range(3).toDF("value")
+    assert(!r.setCompleted(df.collect().toVector, df.schema))
+    assert(r.state == QueryState.Cancelled && r.rows.isEmpty && r.schema.isEmpty)
+    assert(r.metrics.rowsReturned == 0)
+
+    val c = new QueryResult("SELECT 1")
+    c.setRunning()
+    assert(c.setCompleted(df.collect().toVector, df.schema))
+    assert(!c.setFailed("late"))
+    assert(!c.setCancelled())
+    assert(c.state == QueryState.Completed && c.errorMessage.isEmpty)
+    assert(c.rows.length == 3)
+  }
+
+  test("setRunning on a terminal result changes nothing") {
+    val r = new QueryResult("SELECT 1")
+    r.setFailed("boom")
+    val metrics = r.metrics
+    r.setRunning()
+    assert(r.state == QueryState.Failed && r.isTerminal)
+    assert(r.metrics == metrics)
+  }
+
+  test("await is true at once on a terminal result, false after the timeout " +
+      "on a running one") {
+    val done = new QueryResult("SELECT 1")
+    done.setCancelled()
+    val t0 = System.nanoTime()
+    assert(done.await(10.seconds))
+    assert((System.nanoTime() - t0).nanos < 5.seconds)
+
+    val running = new QueryResult("SELECT 1")
+    running.setRunning()
+    val t1 = System.nanoTime()
+    assert(!running.await(200.millis))
+    assert((System.nanoTime() - t1).nanos >= 200.millis)
+    assert(running.state == QueryState.Running)
   }
 
   // --- real execution (reference runs these against in-memory DuckDB) -----
@@ -265,6 +315,59 @@ class QueryExecutorSpec extends SparkSuite {
     }
     val elapsed = (System.nanoTime() - t0) / 1e9
     assert(elapsed < 30, s"timeout took ${elapsed}s — job group cancel not effective")
+  }
+
+  test("a failed or timed-out execute leaves no registry entry behind") {
+    val fast = new QueryExecutor(spark, QueryConfig(minTimeout = 1))
+    spark.udf.register("spec_sleep_udf", (x: Long) => { Thread.sleep(5); x })
+    val seen = Metrics.recentSpans.map(_.queryId).toSet
+    intercept[Exception](fast.execute("SELECT * FROM nonexistent_table_xyz"))
+    intercept[QueryTimeoutError] {
+      fast.execute("SELECT sum(spec_sleep_udf(id)) FROM range(20000)",
+        timeout = Some(1))
+    }
+    val spans = Metrics.recentSpans.filterNot(s => seen(s.queryId))
+    assert(spans.map(_.status).toSet == Set("failed", "timeout"), spans)
+    spans.foreach { s =>
+      assert(fast.getStatus(UUID.fromString(s.queryId)).isEmpty, s)
+    }
+  }
+
+  test("thread budget: execute starts one graft-query thread, " +
+      "executeAsync at most two lifecycle threads") {
+    import scala.jdk.CollectionConverters._
+    def lifecycleThreads: Set[String] =
+      Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+        .filter(_.startsWith("graft-")).toSet
+    // the statement holds its worker until the test has counted threads
+    spark.udf.register("spec_gate_udf",
+      (x: Int) => { ThreadBudgetGate.latch.await(60, SECONDS); x })
+    val sql = "SELECT spec_gate_udf(1) AS one"
+    def startedBy(run: () => Unit): Set[String] = {
+      ThreadBudgetGate.latch = new CountDownLatch(1)
+      val before = lifecycleThreads
+      val caller = new Thread(() => run(), "spec-caller")
+      caller.start()
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (!(lifecycleThreads -- before).exists(_.startsWith("graft-query-")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      Thread.sleep(200) // room for any later hop to show up
+      val started = lifecycleThreads -- before
+      ThreadBudgetGate.latch.countDown()
+      caller.join(60000)
+      started
+    }
+    @volatile var served: Option[QueryResult] = None
+    val sync = startedBy(() => served = Some(executor.execute(sql)))
+    assert(sync.size == 1 && sync.head.startsWith("graft-query-"), sync)
+    assert(served.exists(_.rows.head.getInt(0) == 1))
+
+    @volatile var async: Option[QueryResult] = None
+    val asyncThreads = startedBy(() => async = Some(executor.executeAsync(sql)))
+    assert(asyncThreads.count(_.startsWith("graft-query-")) == 1, asyncThreads)
+    assert(asyncThreads.size <= 2, asyncThreads)
+    assert(async.exists(_.await(60.seconds)))
+    assert(async.exists(_.state == QueryState.Completed))
   }
 
   test("cancel from another thread transitions a running query to cancelled") {

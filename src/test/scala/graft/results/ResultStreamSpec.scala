@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.QueryResult
+import graft.engine.{Metrics, QueryResult}
 
 /** CSV formatting matrix ported from the reference
   * (reference: tests/test_export.py:69-127) and NDJSON protocol order
@@ -152,5 +152,19 @@ class ResultStreamSpec extends AnyFunSuite {
     intercept[graft.engine.InvalidSqlError] {
       ResultStream.csvForSql(executor, "DELETE FROM t")
     }
+  }
+
+  test("csvForSql de-registers the result it exported") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val executor = new graft.engine.QueryExecutor(spark)
+    val seen = Metrics.recentSpans.map(_.queryId).toSet
+    val out = ResultStream.csvForSql(executor,
+      "SELECT id FROM range(3) ORDER BY id")
+      .map(new String(_, "UTF-8")).mkString
+    assert(out === "id\r\n0\r\n1\r\n2\r\n")
+    val ids = Metrics.recentSpans.map(_.queryId).filterNot(seen)
+    assert(ids.size === 1)
+    assert(executor.getStatus(java.util.UUID.fromString(ids.head)).isEmpty)
   }
 }
