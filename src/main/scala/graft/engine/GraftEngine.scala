@@ -14,8 +14,33 @@ import org.apache.spark.sql.SparkSession
  * On a real cluster the same builder config (minus master) applies —
  * shuffle partitions sized to cores, UTC session timezone for oracle
  * parity, adaptive execution for skew/coalesce at scale.
+ *
+ * `buildSession` builds serving sessions only: the HTTP façade's `main`,
+ * `graft.Cli` and the serving benchmark use it. A serving session runs
+ * with whole-stage codegen (WSCG) off ([[ServingCodegen]]). Every request
+ * is a new read-only statement, and with WSCG on each new statement text
+ * pays a fixed cost before its first row: Janino compiles the fused stage
+ * classes generated for that one statement, and HotSpot then JIT-compiles
+ * them. That cost repays itself only through a per-row gain, which only
+ * large scans recoup. Measured per new statement text, one client
+ * running the serving benchmark's 16 analyze templates at sf0.1 on
+ * local[4] (statements 33–96, two runs each, WSCG on → off): generated
+ * classes 1.19–1.25 → 0.67–0.70, Janino 8.7–8.9 → 3.6–4.5 ms, HotSpot
+ * JIT (process-wide) 158–164 → 96–110 ms, process CPU 284 → 229–239 ms;
+ * the per-row side of the trade is Spark task CPU, 59–62 → 71–74 ms.
+ * Operators then run through their interpreted iterators with small
+ * generated expression classes (projections, predicates, orderings), so
+ * the generated-class cache also holds fewer and smaller classes. The
+ * driver's batch sessions keep WSCG: `graft.Bench`, `graft.Verify` and
+ * `graft.ScaleGen` build their own; their plans scan whole tables, the
+ * case the per-row gain serves.
  */
 object GraftEngine {
+
+  /** The serving session's whole-stage codegen switch (see the object's
+    * scaladoc for the trade-off). A SQL conf, so it can also be set on a
+    * session that shares this one's SparkContext. */
+  val ServingCodegen: (String, String) = "spark.sql.codegen.wholeStage" -> "false"
 
   def buildSession(config: AppConfig = AppConfig.fromEnv(), appName: String = "graft"): SparkSession = {
     val threads = config.engine.threads
@@ -31,10 +56,12 @@ object GraftEngine {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", config.engine.memoryLimit)
-      // A serving engine compiles codegen stages for every distinct query
-      // shape it hosts; the default 100-entry generated-class cache thrashes
-      // once the workload exceeds ~30 distinct queries and each re-arrival
-      // pays a full Janino recompile (seconds for wide projections).
+      .config(ServingCodegen._1, ServingCodegen._2)
+      // A serving engine compiles expression classes (projections,
+      // predicates, orderings) for every distinct query shape it hosts;
+      // the default 100-entry generated-class cache evicts them once a
+      // few dozen shapes are live, and each re-arrival pays its Janino
+      // compile again.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       // Spark's live status store keeps up to 1000 jobs, stages and SQL
       // executions (with their task and plan-metric wrappers) even with the

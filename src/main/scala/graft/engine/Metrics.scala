@@ -31,16 +31,19 @@ final case class QuerySpan(
  * `query_rows_returned` counter, `active_queries` up-down counter;
  * observability.py:67-101 record helpers) without an OTel dependency:
  * the histogram uses the OTel SDK's default explicit bucket boundaries
- * (what the reference's unconfigured `create_histogram` exports), and the
- * per-query spans are kept in a bounded ring exposed to tests/exporters.
+ * scaled to seconds (see [[DurationBuckets]]), and the per-query spans
+ * are kept in a bounded ring exposed to tests/exporters.
  */
 object Metrics {
 
-  /** OTel SDK default explicit-bucket histogram boundaries — the exact
-    * buckets the reference's `query_duration_seconds` exports. */
+  /** The OTel SDK's default explicit-bucket boundaries (0, 5, 10, … 10,000)
+    * divided by 1,000: 0 s … 10 s. The reference's unconfigured
+    * `create_histogram` exports the SDK default as is, but those bounds
+    * are meant for milliseconds, and `query_duration_seconds` records
+    * seconds, so every query under 5 s would land in one bucket. */
   val DurationBuckets: Array[Double] =
-    Array(0.0, 5.0, 10.0, 25.0, 50.0, 75.0, 100.0, 250.0, 500.0, 750.0,
-      1000.0, 2500.0, 5000.0, 7500.0, 10000.0)
+    Array(0.0, 0.005, 0.01, 0.025, 0.05, 0.075, 0.1, 0.25, 0.5, 0.75,
+      1.0, 2.5, 5.0, 7.5, 10.0)
 
   private final class Histogram {
     val bucketCounts = new Array[AtomicLong](DurationBuckets.length + 1)

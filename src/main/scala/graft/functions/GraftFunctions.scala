@@ -92,10 +92,15 @@ object GraftFunctions {
     * from a fresh registry and registers again; `cloneSession()` copies the
     * registry and keeps them. The registry's own lock makes the check and
     * the registration one step. */
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = registerOnce(spark, builders)
+
+  /** Register each named builder that the session's function registry
+    * lacks, and leave the present ones in place (see [[register]]). */
+  private[graft] def registerOnce(spark: SparkSession,
+      named: Seq[(String, Seq[Expression] => Expression)]): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.synchronized {
-      builders.foreach { case (name, builder) =>
+      named.foreach { case (name, builder) =>
         if (!reg.functionExists(FunctionIdentifier(name)))
           reg.createOrReplaceTempFunction(name, builder, "built-in")
       }

@@ -17,16 +17,17 @@ import org.apache.spark.sql.functions._
  */
 object Prune {
 
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_bloom_agg" -> ((c: Seq[Expression]) => new BloomFilterAggregate(c(0), c(1))),
+    "graft_might_contain" -> ((c: Seq[Expression]) => BloomFilterMightContain(c(0), c(1))))
+
   /** Register the bloom expressions under graft names (they are Catalyst
     * internals without FunctionRegistry entries; same temp-function route
-    * as graft.functions.GraftFunctions — idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      (c: Seq[Expression]) => new BloomFilterAggregate(c(0), c(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      (c: Seq[Expression]) => BloomFilterMightContain(c(0), c(1)), "built-in")
-  }
+    * as graft.functions.GraftFunctions, once per function registry, so
+    * every `bloomSemiJoin` does not replace both builders and log a
+    * warning for each). */
+  def register(spark: SparkSession): Unit =
+    graft.functions.GraftFunctions.registerOnce(spark, builders)
 
   /**
    * Bloom-filter semi join: EXACTLY `fact LEFT SEMI JOIN dim` on the keys

@@ -190,12 +190,23 @@ class QueryExecutorSpec extends SparkSuite {
     Metrics.recordQueryDuration(99999.0, "spec_status")
     val h = Metrics.durationHistogram("spec_status").get
     assert(h.length == Metrics.DurationBuckets.length + 1)
-    assert(h(1) == 1)        // 0 < 0.3 <= 5
-    assert(h(2) == 1)        // 5 < 7 <= 10
+    assert(h(8) == 1)        // 0.25 < 0.3 <= 0.5
+    assert(h(13) == 1)       // 5 < 7 <= 7.5
     assert(h.last == 1)      // overflow bucket
     assert(h.sum == 3)
     val (count, sum) = Metrics.durationStats("spec_status")
     assert(count == 3 && sum > 100006.0 && sum < 100007.0)
+  }
+
+  test("query_duration_seconds separates sub-second from multi-second queries") {
+    Metrics.recordQueryDuration(0.2, "spec_split")
+    Metrics.recordQueryDuration(3.0, "spec_split")
+    val h = Metrics.durationHistogram("spec_split").get
+    val b = Metrics.DurationBuckets
+    assert(b.head == 0.0 && b.last == 10.0, b.mkString(","))
+    assert(h(7) == 1)        // 0.1 < 0.2 <= 0.25
+    assert(h(12) == 1)       // 2.5 < 3 <= 5
+    assert(h.sum == 2)
   }
 
   test("max_rows cap truncates driver buffering (enforced, unlike reference)") {
