@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.GraftEngine
+
 /**
  * Benchmark main — runs every `SparkEntry.queries` entry on
  * `SPARK_GRAFT_SF_DIR` and prints one JSON line
@@ -12,9 +14,10 @@ import org.apache.spark.sql.SparkSession
  * timed pass lets one GC pause pollute a query's number). Runs materialize
  * every column through the `noop` DSv2 sink — `count()` would let Catalyst
  * prune projections and under-measure; `collect()` would measure driver
- * transfer instead of the engine. 32 shuffle partitions to match local[32]
- * (not the 200 default — tiny-partition overhead dominates at bench scale;
- * on a real cluster this is cores-proportional, SURVEY §4).
+ * transfer instead of the engine. The session is `GraftEngine.batchSession`:
+ * local[`SPARK_GRAFT_CPUS`] with as many shuffle partitions as cores (not
+ * the 200 default — tiny-partition overhead dominates at bench scale; on a
+ * real cluster this is cores-proportional, SURVEY §4).
  *
  * ISOLATION (round 5): the driver's round-4 artifact measured 352.65 s for
  * an inventory whose committed in-process total is 105.0 s, with
@@ -51,22 +54,6 @@ import org.apache.spark.sql.SparkSession
  * the JSON line.
  */
 object Bench {
-  private[graft] def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; even a 12-query
-      // chunk compiles dozens of codegen stages, and a long-lived serving
-      // engine wants the whole workload resident anyway.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** One measured execution. Unpersists only the blocks THIS query left
    * behind (snapshot diff, not a blanket sweep — a blanket sweep would
    * silently evict anything a future fixture registry deliberately caches
@@ -90,9 +77,9 @@ object Bench {
 
   /** Warm-up + 3 timed runs per query, in one (fresh) SparkSession.
    * Returns (name, median, sortedRuns). */
-  private def timeQueries(names: Seq[String], sfDir: String,
-                          cpus: String): Seq[(String, Double, Seq[Double])] = {
-    val spark = buildSession(cpus)
+  private def timeQueries(names: Seq[String],
+                          sfDir: String): Seq[(String, Double, Seq[Double])] = {
+    val spark = GraftEngine.batchSession("graft-bench")
     val qs = names.flatMap(n => SparkEntry.queries.get(n).map(fn => n -> fn))
     // TWO warm-up passes. With one, the first timed run consistently read
     // ~1.5x the rest on the heavy queries (x08 temporal triples
@@ -228,12 +215,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // ---- child mode: time a chunk, print machine-readable lines, exit ----
     if (args.length >= 2 && args(0) == "--child") {
       val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      timeQueries(names, sfDir, cpus).foreach { case (n, med, ts) =>
+      timeQueries(names, sfDir).foreach { case (n, med, ts) =>
         println(f"GRAFT_TIME $n $med%.4f ${ts.map(t => f"$t%.4f").mkString(" ")}")
       }
       // Spark's stop() can leave non-daemon threads; a lingering child
@@ -303,7 +289,7 @@ object Bench {
     val amb = math.max(1.0, ambientIndex.getOrElse(1.0))
 
     val results: Seq[(String, Double)] =
-      if (inproc) timeQueries(ordered, sfDir, cpus).map(r => (r._1, r._2))
+      if (inproc) timeQueries(ordered, sfDir).map(r => (r._1, r._2))
       else {
         val chunkSize = sys.env.get("SPARK_GRAFT_BENCH_CHUNK")
           .flatMap(_.toIntOption).filter(_ > 0).getOrElse(12)

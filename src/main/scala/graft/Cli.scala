@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor}
+import graft.engine.{AppConfig, GraftEngine, InvalidSqlError, QueryExecutor}
 import graft.results.{ResultStream, ValueFormat}
 import graft.tables.Tables
 
@@ -23,10 +23,10 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftEngine.buildSession()
-    spark.sparkContext.setLogLevel("WARN")
+    val config = AppConfig.fromEnv()
+    val spark = GraftEngine.buildSession(config)
     Tables.register(spark, sfDir)
-    val executor = new QueryExecutor(spark)
+    val executor = new QueryExecutor(spark, config.query)
 
     args.toList match {
       case "sql" :: sql :: rest =>
@@ -36,7 +36,7 @@ object Cli {
           .takeWhile(l => l != "exit" && l != "quit")
           .foreach(runOne(executor, _, csv = false))
       case "catalog" :: _ =>
-        val provider = new graft.catalog.SparkCatalogProvider(spark)
+        val provider = graft.catalog.IcebergCatalogBinding.providerFor(spark, config.catalog)
         provider.listNamespaces().foreach { ns =>
           println(ns.mkString("."))
           provider.listTables(ns).foreach(t => println(s"  $t"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Optimization-round diagnostic main (guide §1: measure first) — runs one
@@ -25,8 +24,7 @@ object QueryProfile {
       .getOrElse(sys.exit(1))
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Bench.buildSession(cpus)
+    val spark = graft.engine.GraftEngine.batchSession("graft-profile")
 
     val jobs = new scala.collection.mutable.ArrayBuffer[JobRec]
     val byId = new scala.collection.mutable.HashMap[Int, JobRec]

@@ -2456,14 +2456,13 @@ object HttpFacade {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftEngine.buildSession()
-    spark.sparkContext.setLogLevel("WARN")
+    val config = graft.engine.AppConfig.fromEnv()
+    val spark = GraftEngine.buildSession(config)
     Tables.register(spark, sfDir)
     // config-gated Iceberg REST binding: lights up the live catalog when
     // the runtime jar is present, falls back to the session catalog here
-    val provider = graft.catalog.IcebergCatalogBinding.providerFor(
-      spark, graft.engine.AppConfig.fromEnv().catalog)
-    val facade = new HttpFacade(spark, new QueryExecutor(spark), provider)
+    val provider = graft.catalog.IcebergCatalogBinding.providerFor(spark, config.catalog)
+    val facade = new HttpFacade(spark, new QueryExecutor(spark, config.query), provider)
     val bound = facade.start(port)
     System.err.println(s"[graft-http] serving on 127.0.0.1:$bound")
     Thread.currentThread.join()

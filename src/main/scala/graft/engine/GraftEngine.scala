@@ -15,7 +15,11 @@ import org.apache.spark.sql.SparkSession
  * shuffle partitions sized to cores, UTC session timezone for oracle
  * parity, adaptive execution for skew/coalesce at scale.
  *
- * `buildSession` builds serving sessions only: the HTTP façade's `main`,
+ * Every session in the program is built here, from one conf list:
+ * [[batchConf]] is the base, and [[servingConf]] adds the serving
+ * entries to it.
+ *
+ * `buildSession` builds serving sessions: the HTTP façade's `main`,
  * `graft.Cli` and the serving benchmark use it. A serving session runs
  * with whole-stage codegen (WSCG) off ([[ServingCodegen]]). Every request
  * is a new read-only statement, and with WSCG on each new statement text
@@ -30,10 +34,11 @@ import org.apache.spark.sql.SparkSession
  * the per-row side of the trade is Spark task CPU, 59–62 → 71–74 ms.
  * Operators then run through their interpreted iterators with small
  * generated expression classes (projections, predicates, orderings), so
- * the generated-class cache also holds fewer and smaller classes. The
- * driver's batch sessions keep WSCG: `graft.Bench`, `graft.Verify` and
- * `graft.ScaleGen` build their own; their plans scan whole tables, the
- * case the per-row gain serves.
+ * the generated-class cache also holds fewer and smaller classes.
+ *
+ * `batchSession` builds the batch mains' sessions (`graft.Bench`,
+ * `graft.Verify`, `graft.ScaleGen`, `graft.QueryProfile`). They keep
+ * WSCG: their plans scan whole tables, the case the per-row gain serves.
  */
 object GraftEngine {
 
@@ -42,35 +47,55 @@ object GraftEngine {
     * session that shares this one's SparkContext. */
   val ServingCodegen: (String, String) = "spark.sql.codegen.wholeStage" -> "false"
 
-  def buildSession(config: AppConfig = AppConfig.fromEnv(), appName: String = "graft"): SparkSession = {
-    val threads = config.engine.threads
-    // observability first, like the reference's setup_opentelemetry on
-    // app startup: a no-op unless otel.enabled AND the SDK is present
-    // (OtlpBinding scaladoc; reference observability.py:183-186)
-    OtlpBinding.bind(config.otel)
-    SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", config.engine.memoryLimit)
-      .config(ServingCodegen._1, ServingCodegen._2)
-      // A serving engine compiles expression classes (projections,
-      // predicates, orderings) for every distinct query shape it hosts;
-      // the default 100-entry generated-class cache evicts them once a
-      // few dozen shapes are live, and each re-arrival pays its Janino
-      // compile again.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
+  /** The conf every session starts from, and all of a batch session's. */
+  private[engine] def batchConf(threads: Int, appName: String): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$threads]",
+    "spark.app.name" -> appName,
+    "spark.sql.shuffle.partitions" -> threads.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // The generated-class cache defaults to 100 entries. A serving engine
+    // compiles expression classes (projections, predicates, orderings) for
+    // every distinct query shape it hosts, and even a 12-query bench chunk
+    // compiles dozens of codegen stages; at the default they are evicted
+    // and each re-arrival pays its Janino compile again.
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
+  /** A serving session's conf: [[batchConf]] plus the serving entries. */
+  private[engine] def servingConf(config: AppConfig, appName: String): Seq[(String, String)] =
+    batchConf(config.engine.threads, appName) ++ Seq(
+      "spark.driver.memory" -> config.engine.memoryLimit,
+      ServingCodegen,
       // Spark's live status store keeps up to 1000 jobs, stages and SQL
       // executions (with their task and plan-metric wrappers) even with the
       // UI off. Nothing in the engine reads the store, so at the default a
       // long-running server's heap grows with every request it completes.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.sql.ui.retainedExecutions", "100")
+      "spark.ui.retainedJobs" -> "100",
+      "spark.ui.retainedStages" -> "100",
+      "spark.sql.ui.retainedExecutions" -> "100")
+
+  def buildSession(config: AppConfig = AppConfig.fromEnv(), appName: String = "graft"): SparkSession = {
+    // observability first, like the reference's setup_opentelemetry on
+    // app startup: a no-op unless otel.enabled AND the SDK is present
+    // (OtlpBinding scaladoc; reference observability.py:183-186)
+    OtlpBinding.bind(config.otel)
+    build(servingConf(config, appName))
+  }
+
+  /** A batch main's session on `SPARK_GRAFT_CPUS` cores, or on all of the
+    * machine's cores when it is unset. */
+  def batchSession(appName: String): SparkSession = {
+    val threads = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    build(batchConf(threads, appName))
+  }
+
+  private def build(conf: Seq[(String, String)]): SparkSession = {
+    val spark = conf.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   /**

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /**
  * SparkSessionExtensions injector for the graft native functions — the
@@ -13,10 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * }}}
  *
  * makes every `graft_*` function available in pure SQL on any session of
- * the application, with no code call needed. [[GraftFunctions.register]]
- * does the same wiring imperatively for sessions the library didn't build
- * (e.g. a host application's session); both routes register identical
- * builders.
+ * the application, with no code call needed. It injects the same
+ * [[GraftFunctions.table]] that [[GraftFunctions.register]] adds to a
+ * session at run time.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -24,59 +23,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
       "", "", "", "", "4.1.0", "", "built-in")
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String)(
-        builder: Seq[Expression] => Expression): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-
-    inject("graft_vec_dot", "dot product of two numeric arrays") { c =>
-      VecDot(c(0), c(1)) }
-    inject("graft_vec_norm", "L2 norm of a numeric array") { c =>
-      VecNorm(c(0)) }
-    inject("graft_vec_cosine", "cosine similarity of two numeric arrays") { c =>
-      VecCosine(c(0), c(1)) }
-    inject("graft_lsh_bands", "random-hyperplane LSH band keys") { c =>
-      LshBands(c(0), GraftFunctions.literalInt(c(1), "planes"),
-        GraftFunctions.literalInt(c(2), "rowsPerBand")) }
-    inject("graft_minhash_sig", "MinHash signature of hashed shingles") { c =>
-      MinHashSig(c(0), GraftFunctions.literalInt(c(1), "numHashes"),
-        GraftFunctions.literalLong(c(2), "seed")) }
-    inject("graft_simhash64", "64-bit SimHash of a token array") { c =>
-      SimHash64(c(0),
-        if (c.length > 1) GraftFunctions.literalHashMode(c(1), "mode")
-        else false) }
-    inject("graft_word_shingles", "hashed word n-gram shingles of a text") { c =>
-      WordShingleHash(c(0), GraftFunctions.literalInt(c(1), "n")) }
-    inject("graft_winnow", "winnowing fingerprints of a text column") { c =>
-      Winnow(c(0), GraftFunctions.literalInt(c(1), "k"),
-        GraftFunctions.literalInt(c(2), "window"),
-        if (c.length > 3) GraftFunctions.literalHashMode(c(3), "mode")
-        else false) }
-    inject("graft_lang_id", "stopword-profile language id of a token array") { c =>
-      LangIdExpr(c(0), graft.ops.TextAnalysis.stopwordProfiles.toSeq) }
-    inject("graft_text_stats", "one-pass per-document text statistics struct") { c =>
-      TextStatsExpr(c(0)) }
-    inject("graft_gopher_stats", "one-pass repetition/diversity counts struct") { c =>
-      GopherStatsExpr(c(0)) }
-    inject("graft_quantize_int8", "one-pass symmetric int8 quantization struct") { c =>
-      QuantizeInt8Expr(c(0)) }
-    inject("graft_gram_products", "6-dp-quantized upper-triangle Gram products") { c =>
-      GramProducts(c(0)) }
-    inject("graft_char_pairs", "adjacent character pairs within each word") { c =>
-      CharPairsExpr(c(0)) }
-    inject("graft_anchor_hashes", "60-bit md5 of every sliding k-word window") { c =>
-      AnchorHashes(c(0), GraftFunctions.literalInt(c(1), "k")) }
-    inject("graft_bpe_segment", "BPE merge-list apply: subword token array") { c =>
-      BpeSegmentExpr(c(0), GraftFunctions.literalMerges(c(1), "merges")) }
-    inject("graft_wrapped_token_pairs", "adjacent token pairs of a BPE-wrapped string") { c =>
-      WrappedTokenPairs(c(0)) }
-    // Spark's runtime-filter expressions, surfaced for the explicit
-    // bloom-prune operators (mirrors graft.ops.Prune.register)
-    inject("graft_bloom_agg", "Bloom filter sketch aggregate over long hashes") { c =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(c(0), c(1)) }
-    inject("graft_might_contain", "Bloom filter membership probe") { c =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        c(0), c(1)) }
-  }
+    }
 }

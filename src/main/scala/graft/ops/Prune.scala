@@ -1,8 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -16,18 +14,6 @@ import org.apache.spark.sql.functions._
  * operator makes the plan shape explicit, deterministic, and testable.
  */
 object Prune {
-
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_bloom_agg" -> ((c: Seq[Expression]) => new BloomFilterAggregate(c(0), c(1))),
-    "graft_might_contain" -> ((c: Seq[Expression]) => BloomFilterMightContain(c(0), c(1))))
-
-  /** Register the bloom expressions under graft names (they are Catalyst
-    * internals without FunctionRegistry entries; same temp-function route
-    * as graft.functions.GraftFunctions, once per function registry, so
-    * every `bloomSemiJoin` does not replace both builders and log a
-    * warning for each). */
-  def register(spark: SparkSession): Unit =
-    graft.functions.GraftFunctions.registerOnce(spark, builders)
 
   /**
    * Bloom-filter semi join: EXACTLY `fact LEFT SEMI JOIN dim` on the keys
@@ -43,8 +29,7 @@ object Prune {
       fact: DataFrame, factKey: String,
       dim: DataFrame, dimKey: String,
       expectedItems: Long = 1000000L): DataFrame = {
-    val spark = fact.sparkSession
-    register(spark)
+    graft.functions.GraftFunctions.register(fact.sparkSession)
     // Aggregate xxhash64 of the dim keys into ONE sketch row and hand it
     // to the fact side as a binary literal: might_contain requires a
     // constant (or scalar subquery) filter argument, and this single-row

@@ -192,10 +192,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("GraftExtensions injector covers every imperatively-registered name") {
     GraftFunctions.register(spark)
-    // the bloom names' imperative path lives in Prune.register — invoke
-    // it here so the test doesn't depend on another suite having run it
-    // on the shared session first
-    graft.ops.Prune.register(spark)
     val registered = spark.sessionState.functionRegistry.listFunction()
       .map(_.funcName).filter(_.startsWith("graft_")).toSet
     val ext = new org.apache.spark.sql.SparkSessionExtensions

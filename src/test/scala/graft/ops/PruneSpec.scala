@@ -9,21 +9,6 @@ import graft.tables.Tables
   * the sketch filter sitting on the fact scan before any exchange. */
 class PruneSpec extends SparkSuite {
 
-  test("register adds the bloom functions once per registry") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val s = spark.newSession()
-    val reg = s.sessionState.functionRegistry
-    val names = Seq("graft_bloom_agg", "graft_might_contain")
-      .map(FunctionIdentifier(_))
-    assert(names.forall(n => !reg.functionExists(n)))
-    Prune.register(s)
-    val first = names.map(n => n -> reg.lookupFunction(n).get)
-    Prune.register(s)
-    first.foreach { case (n, info) =>
-      assert(reg.lookupFunction(n).get eq info, s"$n was replaced")
-    }
-  }
-
   test("bloomSemiJoin equals the plain semi join exactly") {
     val li = Tables(spark, sf, "lineitem")
     val dim = Tables(spark, sf, "part").filter(col("p_size") === 1)
